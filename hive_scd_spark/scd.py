@@ -5,23 +5,28 @@ The reference replays every record through an in-memory H2 database
 Here the same semantics are *compiled once on the driver* into Catalyst
 expressions:
 
-- ``UPDATE t SET c1=e1, c2=e2 WHERE w``  →  one ``select()`` projecting
-  ``when(w, e_i).otherwise(c_i)`` per assigned column.  A single
-  ``select`` (not chained ``withColumn``) guarantees H2/ANSI UPDATE
-  semantics: every SET expression and the WHERE see the **pre-statement**
-  row (SURVEY.md §3.4).
-- ``DELETE FROM t WHERE w``  →  ``filter(NOT coalesce(w, false))``.
+- ``UPDATE t SET c1=e1, c2=e2 WHERE w``  →  one SELECT projecting
+  ``CASE WHEN coalesce(w, false) THEN e_i ELSE c_i END`` per assigned
+  column.  A single
+  projection (not one per SET) guarantees H2/ANSI UPDATE semantics:
+  every SET expression and the WHERE see the **pre-statement** row
+  (SURVEY.md §3.4).
+- ``DELETE FROM t WHERE w``  →  ``WHERE NOT coalesce(w, false)``.
   ``coalesce(..., false)`` preserves SQL three-valued logic: rows whose
   predicate evaluates to NULL are *kept*, not deleted.
 - Across statements, later statements see earlier statements' effects —
-  the fold applies them in file order, exactly like the sequential H2
-  replay (``SQLUpdater.java:167-169``).
+  each statement's SELECT wraps the previous one, in file order, exactly
+  like the sequential H2 replay (``SQLUpdater.java:167-169``).
 
-Everything below the fold is ordinary logical-plan construction:
-Catalyst pushes query predicates through the when/otherwise chain where
-valid, prunes columns the DML doesn't touch, and runs the whole thing
-in whole-stage codegen.  At 100 TB there is no extra shuffle and no
-Python in the row path — the SCD layer costs roughly a projection.
+The statements compile in one Python pass and reach Spark as one nested
+``spark.sql`` query per bounded chunk, so the driver pays one parse and
+one analysis per chunk rather than one per statement.  Everything below
+is ordinary logical-plan construction: Catalyst pushes query predicates
+through the CASE chain where valid, prunes columns the DML doesn't
+touch, and runs the whole thing in whole-stage codegen.  There is no
+extra shuffle and no Python in the row path; the plan carries one
+Project or Filter per applied statement (see SCALE_NOTES.md for the
+measured build and execution cost by log length).
 """
 
 from __future__ import annotations
@@ -31,6 +36,7 @@ from datetime import date, datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, DataType, MapType, StructType
 
 from hive_scd_spark.fs import fs_for
 from hive_scd_spark.updates import Stmt, applicable, parse_script, parse_scd_time
@@ -78,41 +84,98 @@ def resolve_as_of(as_of=None) -> int:
     raise TypeError(f"Unsupported as_of value: {as_of!r}")
 
 
-def _statement_condition(stmt: Stmt):
-    """WHERE → boolean Column; missing WHERE applies to every row."""
-    if stmt.where is None:
-        return F.lit(True)
-    # coalesce(pred, false): NULL predicate ⇒ no match (3-valued logic)
-    return F.coalesce(F.expr(stmt.where).cast("boolean"), F.lit(False))
+# Catalyst's Resolution batch needs about one fixed-point iteration per
+# level of query nesting: with the default 100 iterations a 90-deep
+# nested SELECT fails ("Max iterations (100) reached for batch
+# Resolution") while 60 passes.  A chunk of half that depth, less a
+# margin, resolves with room to spare.
+MAX_ITERATIONS_CONF = "spark.sql.analyzer.maxIterations"
 
 
-def _apply_update(df: DataFrame, stmt: Stmt) -> DataFrame:
-    resolver = {c.lower(): c for c in df.columns}
+def _chunk_depth(spark: SparkSession) -> int:
+    """Statements compiled into one nested query (one parse, one
+    analysis), derived from the session's analyzer iteration limit."""
+    return max(1, int(spark.conf.get(MAX_ITERATIONS_CONF)) // 2 - 5)
+
+
+def _quote(name: str) -> str:
+    """Backtick-quote an identifier, doubling embedded backticks."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _sql_type(dt: DataType) -> str:
+    """SQL text of a Spark type, usable in ``CAST(… AS <type>)``."""
+    if isinstance(dt, StructType):
+        fields = ", ".join(f"{_quote(f.name)}: {_sql_type(f.dataType)}" for f in dt.fields)
+        return f"STRUCT<{fields}>"
+    if isinstance(dt, ArrayType):
+        return f"ARRAY<{_sql_type(dt.elementType)}>"
+    if isinstance(dt, MapType):
+        return f"MAP<{_sql_type(dt.keyType)}, {_sql_type(dt.valueType)}>"
+    return dt.simpleString()
+
+
+def _check_fragments(spark: SparkSession, fragments: list[str]) -> None:
+    """Parse every WHERE/SET fragment on its own, as ``F.expr`` does, in
+    one JVM call and before anything is spliced.  A fragment that is not
+    exactly one expression — ``a = 1) x UNION ALL SELECT …`` — raises
+    ``ParseException`` here, so no statement text can change the shape
+    of the compiled query.  ``F.expr`` itself parses lazily; converting
+    the column to a Catalyst expression forces the parse (no analysis)."""
+    if fragments:
+        spark._jsparkSession.expression(F.struct(*map(F.expr, fragments))._jc)
+
+
+def _splice(fragment: str) -> str:
+    # own lines: a trailing `-- comment` in the fragment ends there
+    return f"(\n{fragment}\n)"
+
+
+def _statement_layer(stmt: Stmt, columns: list[str], types: dict[str, str]) -> tuple[str, str]:
+    """One statement → ``(head, tail)`` of the SELECT that wraps the
+    relation holding every earlier statement's effects, in the forms the
+    module docstring gives.  SET columns resolve case-insensitively, like
+    H2's unquoted identifiers; the WHERE and each SET value are cast to
+    boolean and to the column's type."""
+    cond = "true" if stmt.where is None else (
+        f"coalesce(CAST({_splice(stmt.where)} AS boolean), false)"
+    )
+    if stmt.kind == "delete":
+        return "SELECT * FROM", f"WHERE NOT {cond}"
+    if stmt.kind != "update":
+        raise ValueError(f"Unknown statement kind: {stmt.kind}")
+    resolver = {c.lower(): c for c in columns}
     assigned: dict[str, str] = {}
     for col, expr in stmt.sets:
         actual = resolver.get(col.lower())
         if actual is None:
             raise ValueError(
-                f"UPDATE assigns unknown column {col!r} (table has {df.columns}) "
+                f"UPDATE assigns unknown column {col!r} (table has {columns}) "
                 f"in statement: {stmt.sql!r}"
             )
-        assigned[actual] = expr
-    cond = _statement_condition(stmt)
-    field_types = {f.name: f.dataType for f in df.schema.fields}
-    projections = []
-    for c in df.columns:
-        if c in assigned:
-            new_val = F.expr(assigned[c]).cast(field_types[c])
-            projections.append(F.when(cond, new_val).otherwise(F.col(c)).alias(c))
+        assigned[actual] = f"CAST({_splice(expr)} AS {types[actual]})"
+    items = []
+    for c in columns:
+        q = _quote(c)
+        if c not in assigned:
+            items.append(q)
+        elif stmt.where is None:
+            items.append(f"{assigned[c]} AS {q}")
         else:
-            projections.append(F.col(c))
-    return df.select(*projections)
+            items.append(f"CASE WHEN {cond} THEN {assigned[c]} ELSE {q} END AS {q}")
+    return f"SELECT {', '.join(items)} FROM", ""
 
 
-def _apply_delete(df: DataFrame, stmt: Stmt) -> DataFrame:
-    if stmt.where is None:
-        return df.filter(F.lit(False))  # DELETE FROM t; removes every row
-    return df.filter(~F.coalesce(F.expr(stmt.where).cast("boolean"), F.lit(False)))
+def _nest(layers: list[tuple[str, str]]) -> str:
+    """Nest statement layers, first statement innermost, over the
+    ``{base}`` placeholder of ``spark.sql``'s kwargs formatter.  Braces
+    in statement text are doubled so the formatter keeps them literal."""
+    query = "{base}"
+    for n, (head, tail) in enumerate(layers):
+        head, tail = (t.replace("{", "{{").replace("}", "}}") for t in (head, tail))
+        src = f"(\n{query}\n)" if n else query
+        query = f"{head} {src} {tail}"
+    return query
 
 
 def apply_statements(df: DataFrame, stmts, as_of=None, compat: str = "quoted") -> DataFrame:
@@ -121,24 +184,33 @@ def apply_statements(df: DataFrame, stmts, as_of=None, compat: str = "quoted") -
 
     This is the rebuild of the reference's per-record apply loop
     (``SQLUpdater.java:161-175``) as lazy logical-plan construction.
+    The applicable statements compile in one Python pass into one SQL
+    layer each (:func:`_statement_layer`), nested into one query per
+    chunk of :func:`_chunk_depth` statements; each chunk is one
+    ``spark.sql`` call — one parse, one analysis — over the previous
+    chunk's analyzed frame, so build time grows linearly with the log.
     ``compat="reference"`` (string scripts only) lexes with the
     reference's raw line algorithm INCLUDING its read-time as-of filter
     (``SQLUpdater.java:131``) — full behavioral parity.
     """
-    if isinstance(stmts, str):
-        if compat == "reference":
-            stmts = parse_script(stmts, compat, as_of_ms=resolve_as_of(as_of))
-        else:
-            stmts = parse_script(stmts, compat)
     as_of_ms = resolve_as_of(as_of)
-    for stmt in applicable(list(stmts), as_of_ms):
-        if stmt.kind == "update":
-            df = _apply_update(df, stmt)
-        elif stmt.kind == "delete":
-            df = _apply_delete(df, stmt)
-        else:
-            raise ValueError(f"Unknown statement kind: {stmt.kind}")
-    df.schema  # force analysis → unresolved columns/exprs fail at compile time (A12)
+    if isinstance(stmts, str):
+        stmts = parse_script(stmts, compat, as_of_ms=as_of_ms if compat == "reference" else None)
+    todo = applicable(list(stmts), as_of_ms)
+    if not todo:
+        return df
+    schema = df.schema
+    columns = [f.name for f in schema.fields]
+    types = {f.name: _sql_type(f.dataType) for f in schema.fields}
+    layers = [_statement_layer(stmt, columns, types) for stmt in todo]
+    spark = df.sparkSession
+    _check_fragments(
+        spark, [f for s in todo for f in (s.where, *(e for _c, e in s.sets)) if f is not None]
+    )
+    depth = _chunk_depth(spark)
+    for i in range(0, len(layers), depth):
+        # spark.sql analyzes eagerly: unresolved columns/exprs fail here (A12)
+        df = spark.sql(_nest(layers[i : i + depth]), base=df)
     return df
 
 
@@ -545,15 +617,20 @@ def compact(
     format: str = "parquet",
     **kw,
 ) -> DataFrame:
-    """Incremental compaction: fold the statement log into a Parquet
-    snapshot and return the compacted DataFrame.
+    """Compaction: fold the statement log into a Parquet snapshot and
+    return the compacted DataFrame.
 
     The README's operational pattern (``README.md:239-244``): serve
     current-state queries from the snapshot (no DML replay at all),
     keep the raw dir + ``.updates`` as the full history.  Statements
     with effective time **after** *as_of* remain pending — re-running
     compact later with a newer as_of rolls the snapshot forward.
-    A plain write job: no shuffle beyond the source layout."""
+
+    Not incremental: every call replays the **whole** log over the raw
+    base through :func:`read_scd`, so its cost grows with the log, not
+    with the statements appended since the last snapshot (incremental
+    compaction is ROADMAP item 2).  A plain write job: no shuffle
+    beyond the source layout."""
     df = read_scd(spark, path, as_of=as_of, format=format, **kw)
     df.write.mode("overwrite").parquet(snapshot_path)
     return spark.read.parquet(snapshot_path)

@@ -301,7 +301,7 @@ def _where_sep(text: str, i: int) -> int:
 def _unquote(ident: str) -> str:
     ident = ident.strip()
     if len(ident) >= 2 and ident[0] == ident[-1] and ident[0] in ('"', "`"):
-        return ident[1:-1]
+        return ident[1:-1].replace(ident[0] * 2, ident[0])  # `a``b` names a`b
     return ident
 
 

@@ -1,22 +1,22 @@
 """Golden end-to-end test — the reference's worked `doctors` example
-(FIXTURES.md Fixture 1, /root/reference/example/*, golden outputs
-README.md:103-212), run through read_scd at the four as-of settings."""
+(FIXTURES.md Fixture 1: the 11 rows in file order as deflate Avro in
+tests/fixtures/doctors.avro, the verbatim script in
+tests/fixtures/updates; golden outputs README.md:103-212), run through
+read_scd at the four as-of settings."""
 
 from __future__ import annotations
 
 import json
+import os
 import shutil
 
 import pytest
 
 from hive_scd_spark.scd import read_scd
 
-DOCTORS_AVRO = "/root/reference/example/doctors.avro"
-UPDATES = (
-    "UPDATE doctors set number = 12 where number = 2;\n"
-    "-- time=2014-09-01\n"
-    "DELETE FROM doctors WHERE first_name = 'Colin';\n"
-)
+FIXTURES = os.path.join(os.path.dirname(os.path.abspath(__file__)), "fixtures")
+DOCTORS_AVRO = os.path.join(FIXTURES, "doctors.avro")
+UPDATES = os.path.join(FIXTURES, "updates")
 READER_SCHEMA = {
     "type": "record",
     "name": "doctors",
@@ -37,7 +37,7 @@ READER_SCHEMA = {
 def doctors_dir(tmp_path_factory):
     d = tmp_path_factory.mktemp("doctors_scd")
     shutil.copy(DOCTORS_AVRO, d / "doctors.avro")
-    (d / ".updates").write_text(UPDATES)
+    shutil.copy(UPDATES, d / ".updates")
     return str(d)
 
 

@@ -192,3 +192,40 @@ def test_unknown_statement_kind_rejected(spark, sf_dir):
     bogus = Stmt(kind="merge", table="customer", sql="MERGE INTO customer")
     with pytest.raises(ValueError, match="Unknown statement kind"):
         apply_statements(t(spark, sf_dir, "customer"), [bogus], as_of=None)
+
+
+# -- splice safety: statement text reaches spark.sql only as one expression --
+
+
+@pytest.mark.parametrize(
+    "where",
+    [
+        "a = 1) x UNION ALL SELECT 1 AS a FROM (SELECT 1",
+        # closes the compiled DELETE's own brackets: valid SQL once spliced
+        "a = 1) AS boolean), false) UNION ALL SELECT 7 AS a WHERE NOT coalesce(CAST((false",
+    ],
+)
+def test_where_that_is_not_one_expression_raises_and_runs_nothing(spark, where):
+    df = df_of(spark, [(1,), (2,)], "a int")
+    jobs_before = spark.sparkContext.statusTracker().getJobIdsForGroup()
+    with pytest.raises(Exception, match="PARSE_SYNTAX_ERROR"):
+        apply_statements(df, f"DELETE FROM t WHERE {where};")
+    assert spark.sparkContext.statusTracker().getJobIdsForGroup() == jobs_before
+
+
+def test_braces_in_set_literal_stay_literal(spark):
+    df = df_of(spark, [(1, "a")], "k int, s string")
+    out = apply_statements(df, "UPDATE t SET s = '{x}' WHERE k = 1; UPDATE t SET s = s || '}}';")
+    assert [r.s for r in out.collect()] == ["{x}}}"]
+
+
+def test_column_names_with_space_and_backtick(spark):
+    df = df_of(spark, [(1, 10, 20, (0,))], "k int, `my col` int, `a``b` int, s struct<`x y`: int>")
+    out = apply_statements(
+        df,
+        "UPDATE t SET `my col` = `my col` + 1, `a``b` = k, s = named_struct('x y', 5)"
+        " WHERE `a``b` = 20;",
+    )
+    row = out.collect()[0]
+    assert (row["my col"], row["a`b"], row["s"]["x y"]) == (11, 1, 5)
+    assert out.columns == ["k", "my col", "a`b", "s"]

@@ -3,6 +3,8 @@ reference behaviors SQLUpdater.java:54-70,95-105,121-159."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from hive_scd_spark.updates import (
@@ -16,7 +18,7 @@ MS_2014_09_01 = 1409529600000
 
 
 def test_example_script_verbatim():
-    # /root/reference/example/updates
+    # the reference's example script (tests/fixtures/updates)
     text = (
         "UPDATE doctors set number = 12 where number = 2;\n"
         "-- time=2014-09-01\n"
@@ -196,7 +198,8 @@ def test_compat_reference_time_directive_is_raw_prefix():
 def test_compat_reference_matches_default_on_plain_scripts():
     """On scripts without quoted edge cases the two lexers agree —
     including the reference's own example script."""
-    with open("/root/reference/example/updates", encoding="utf-8") as fh:
+    path = os.path.join(os.path.dirname(os.path.abspath(__file__)), "fixtures", "updates")
+    with open(path, encoding="utf-8") as fh:
         text = fh.read()
     assert parse_script(text) == parse_script(text, compat="reference")
 
