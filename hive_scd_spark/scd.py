@@ -84,18 +84,14 @@ def resolve_as_of(as_of=None) -> int:
     raise TypeError(f"Unsupported as_of value: {as_of!r}")
 
 
-# Catalyst's Resolution batch needs about one fixed-point iteration per
-# level of query nesting: with the default 100 iterations a 90-deep
-# nested SELECT fails ("Max iterations (100) reached for batch
-# Resolution") while 60 passes.  A chunk of half that depth, less a
-# margin, resolves with room to spare.
-MAX_ITERATIONS_CONF = "spark.sql.analyzer.maxIterations"
-
-
 def _chunk_depth(spark: SparkSession) -> int:
     """Statements compiled into one nested query (one parse, one
-    analysis), derived from the session's analyzer iteration limit."""
-    return max(1, int(spark.conf.get(MAX_ITERATIONS_CONF)) // 2 - 5)
+    analysis).  Catalyst's Resolution batch needs about one fixed-point
+    iteration per level of nesting: at the default 100 iterations a
+    90-deep nested SELECT fails ("Max iterations (100) reached for batch
+    Resolution") while 60 passes.  Half the limit, less a margin,
+    resolves with room to spare."""
+    return max(1, int(spark.conf.get("spark.sql.analyzer.maxIterations")) // 2 - 5)
 
 
 def _quote(name: str) -> str:
@@ -131,7 +127,7 @@ def _splice(fragment: str) -> str:
     return f"(\n{fragment}\n)"
 
 
-def _statement_layer(stmt: Stmt, columns: list[str], types: dict[str, str]) -> tuple[str, str]:
+def _statement_layer(stmt: Stmt, types: dict[str, str]) -> tuple[str, str]:
     """One statement → ``(head, tail)`` of the SELECT that wraps the
     relation holding every earlier statement's effects, in the forms the
     module docstring gives.  SET columns resolve case-insensitively, like
@@ -144,6 +140,7 @@ def _statement_layer(stmt: Stmt, columns: list[str], types: dict[str, str]) -> t
         return "SELECT * FROM", f"WHERE NOT {cond}"
     if stmt.kind != "update":
         raise ValueError(f"Unknown statement kind: {stmt.kind}")
+    columns = list(types)
     resolver = {c.lower(): c for c in columns}
     assigned: dict[str, str] = {}
     for col, expr in stmt.sets:
@@ -199,10 +196,8 @@ def apply_statements(df: DataFrame, stmts, as_of=None, compat: str = "quoted") -
     todo = applicable(list(stmts), as_of_ms)
     if not todo:
         return df
-    schema = df.schema
-    columns = [f.name for f in schema.fields]
-    types = {f.name: _sql_type(f.dataType) for f in schema.fields}
-    layers = [_statement_layer(stmt, columns, types) for stmt in todo]
+    types = {f.name: _sql_type(f.dataType) for f in df.schema.fields}
+    layers = [_statement_layer(stmt, types) for stmt in todo]
     spark = df.sparkSession
     _check_fragments(
         spark, [f for s in todo for f in (s.where, *(e for _c, e in s.sets)) if f is not None]

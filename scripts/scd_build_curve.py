@@ -94,7 +94,7 @@ def measure(base, n: int, reps: int) -> dict:
 
 def main() -> None:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
-    ap.add_argument("--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR"), required=False)
+    ap.add_argument("--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR"))
     ap.add_argument("--n", default="1,10,46,100,300")
     ap.add_argument("--reps", type=int, default=3)
     args = ap.parse_args()
