@@ -207,10 +207,14 @@ def test_unknown_statement_kind_rejected(spark, sf_dir):
 )
 def test_where_that_is_not_one_expression_raises_and_runs_nothing(spark, where):
     df = df_of(spark, [(1,), (2,)], "a int")
-    jobs_before = spark.sparkContext.statusTracker().getJobIdsForGroup()
-    with pytest.raises(Exception, match="PARSE_SYNTAX_ERROR"):
-        apply_statements(df, f"DELETE FROM t WHERE {where};")
-    assert spark.sparkContext.statusTracker().getJobIdsForGroup() == jobs_before
+    sc = spark.sparkContext
+    sc.setJobGroup("splice-check", "jobs started by a rejected statement")
+    try:
+        with pytest.raises(Exception, match="PARSE_SYNTAX_ERROR"):
+            apply_statements(df, f"DELETE FROM t WHERE {where};")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("splice-check") == []
 
 
 def test_braces_in_set_literal_stay_literal(spark):
