@@ -388,9 +388,10 @@ UPDATE customer SET c_acctbal = c_acctbal + 50.0 WHERE c_mktsegment = 'PROMO';
 
 def scd2_chain_outoforder(spark, sf_dir):
     """Type-2 history over a read-after-write chain whose effective
-    times run AGAINST script order (scd.scd2_history →
-    _independent_boundary_states, VERDICT r13 task 6 — the case r13
-    refused).  Statement 1 (later effective time) assigns
+    times run AGAINST script order (scd.scd2_history restores the
+    source columns at such a boundary and replays what applies there,
+    VERDICT r13 task 6 — the case r13 refused).  Statement 1 (later
+    effective time) assigns
     c_mktsegment; statement 2 (earlier effective time) reads it, so
     boundary states are not prefix-extensible and each boundary folds
     its own applicable statements in script order:

@@ -26,7 +26,8 @@ through the CASE chain where valid, prunes columns the DML doesn't
 touch, and runs the whole thing in whole-stage codegen.  There is no
 extra shuffle and no Python in the row path; the plan carries one
 Project or Filter per applied statement (see SCALE_NOTES.md for the
-measured build and execution cost by log length).
+measured build and execution cost by log length).  ``scd2_history``
+compiles through the same layers and chunks.
 """
 
 from __future__ import annotations
@@ -43,6 +44,7 @@ from hive_scd_spark.updates import Stmt, applicable, parse_script, parse_scd_tim
 
 UPDATES_FILE_NAME = ".updates"  # SQLUpdater.java:32 / README.md:124
 SCD_TIME_CONF = "spark.scd.time"  # session as-of knob, like Hive's scd.time
+_ALIVE = "__alive"  # history: the row still exists at this point of the fold
 
 
 def resolve_as_of(as_of=None) -> int:
@@ -127,17 +129,23 @@ def _splice(fragment: str) -> str:
     return f"(\n{fragment}\n)"
 
 
-def _statement_layer(stmt: Stmt, types: dict[str, str]) -> tuple[str, str]:
+def _statement_layer(stmt: Stmt, types: dict[str, str], carry=()) -> tuple[str, str]:
     """One statement → ``(head, tail)`` of the SELECT that wraps the
     relation holding every earlier statement's effects, in the forms the
     module docstring gives.  SET columns resolve case-insensitively, like
     H2's unquoted identifiers; the WHERE and each SET value are cast to
-    boolean and to the column's type."""
+    boolean and to the column's type.  *carry* (history only) names
+    columns passed through after the table's own, the ``__alive`` flag
+    first; a DELETE then clears that flag instead of dropping the row."""
     cond = "true" if stmt.where is None else (
         f"coalesce(CAST({_splice(stmt.where)} AS boolean), false)"
     )
+    passed = [_quote(c) for c in carry]
     if stmt.kind == "delete":
-        return "SELECT * FROM", f"WHERE NOT {cond}"
+        if not carry:
+            return "SELECT * FROM", f"WHERE NOT {cond}"
+        passed[0] = f"{passed[0]} AND NOT {cond} AS {passed[0]}"
+        return f"SELECT {', '.join([*map(_quote, types), *passed])} FROM", ""
     if stmt.kind != "update":
         raise ValueError(f"Unknown statement kind: {stmt.kind}")
     columns = list(types)
@@ -160,7 +168,7 @@ def _statement_layer(stmt: Stmt, types: dict[str, str]) -> tuple[str, str]:
             items.append(f"{assigned[c]} AS {q}")
         else:
             items.append(f"CASE WHEN {cond} THEN {assigned[c]} ELSE {q} END AS {q}")
-    return f"SELECT {', '.join(items)} FROM", ""
+    return f"SELECT {', '.join([*items, *passed])} FROM", ""
 
 
 def _nest(layers: list[tuple[str, str]]) -> str:
@@ -173,6 +181,21 @@ def _nest(layers: list[tuple[str, str]]) -> str:
         src = f"(\n{query}\n)" if n else query
         query = f"{head} {src} {tail}"
     return query
+
+
+def _run_layers(df: DataFrame, layers: list[tuple[str, str]], stmts: list[Stmt]) -> DataFrame:
+    """Check every fragment of *stmts*, then hand *layers* to Spark as
+    one nested ``spark.sql`` per chunk of :func:`_chunk_depth` layers,
+    each over the previous chunk's analyzed frame."""
+    spark = df.sparkSession
+    _check_fragments(
+        spark, [f for s in stmts for f in (s.where, *(e for _c, e in s.sets)) if f is not None]
+    )
+    depth = _chunk_depth(spark)
+    for i in range(0, len(layers), depth):
+        # spark.sql analyzes eagerly: unresolved columns/exprs fail here (A12)
+        df = spark.sql(_nest(layers[i : i + depth]), base=df)
+    return df
 
 
 def apply_statements(df: DataFrame, stmts, as_of=None, compat: str = "quoted") -> DataFrame:
@@ -197,16 +220,7 @@ def apply_statements(df: DataFrame, stmts, as_of=None, compat: str = "quoted") -
     if not todo:
         return df
     types = {f.name: _sql_type(f.dataType) for f in df.schema.fields}
-    layers = [_statement_layer(stmt, types) for stmt in todo]
-    spark = df.sparkSession
-    _check_fragments(
-        spark, [f for s in todo for f in (s.where, *(e for _c, e in s.sets)) if f is not None]
-    )
-    depth = _chunk_depth(spark)
-    for i in range(0, len(layers), depth):
-        # spark.sql analyzes eagerly: unresolved columns/exprs fail here (A12)
-        df = spark.sql(_nest(layers[i : i + depth]), base=df)
-    return df
+    return _run_layers(df, [_statement_layer(stmt, types) for stmt in todo], todo)
 
 
 # -- directory-level read (A1/A11) ------------------------------------------
@@ -327,281 +341,95 @@ def snapshot(df: DataFrame, path: str | None = None, mode: str = "overwrite") ->
     return df
 
 
-def _chain_boundary_states(df, stmts, times, cols, field_types):
-    """Boundary states via ONE sequential select chain — the
-    ``apply_statements`` semantics (each statement sees the POST-image
-    of every earlier statement), so read-after-write chains fold
-    correctly.  Valid only when script order agrees with
-    effective-time order (checked by the caller): then the statements
-    applicable at boundary t_i are exactly a prefix, and each
-    boundary's state is the previous boundary's state plus that
-    boundary's statements in script order.  Returns the frame carrying
-    one ``__b{i}`` struct column (tracked cols + ``__alive``) per
-    boundary; Catalyst collapses the select chain into one projection
-    (the A9 single-codegen-stage design), so cost stays k× the
-    projection width with no joins and no per-time scans."""
-    base_cols = list(df.columns)
-    work = df.select(*base_cols, F.lit(True).alias("__alive"))
-    carried: list[str] = []
-    si = 0
-
-    def key(s):
-        return 0 if s.effective_ms is None else s.effective_ms
-
-    for i, t in enumerate(times):
-        while si < len(stmts) and key(stmts[si]) <= t:
-            stmt = stmts[si]
-            si += 1
-            cond = (
-                F.lit(True)
-                if stmt.where is None
-                else F.coalesce(F.expr(stmt.where).cast("boolean"), F.lit(False))
-            )
-            if stmt.kind == "delete":
-                work = work.select(
-                    *base_cols,
-                    *carried,
-                    (F.col("__alive") & ~cond).alias("__alive"),
-                )
-            else:
-                new = {}
-                for col, set_expr in stmt.sets:
-                    actual = next(
-                        (c for c in base_cols if c.lower() == col.lower()), col
-                    )
-                    new[actual] = F.when(
-                        cond, F.expr(set_expr).cast(field_types[actual])
-                    ).otherwise(F.col(actual))
-                work = work.select(
-                    *[new.get(c, F.col(c)).alias(c) for c in base_cols],
-                    *carried,
-                    "__alive",
-                )
-        snap = F.struct(
-            *[F.col(c).alias(c) for c in cols], F.col("__alive").alias("__alive")
-        )
-        name = f"__b{i}"
-        work = work.select(*base_cols, *carried, "__alive", snap.alias(name))
-        carried.append(name)
-    return work
-
-
-def _independent_boundary_states(df, stmts, times, cols, field_types):
-    """Boundary states for read-after-write chains whose effective
-    times are OUT OF script order (VERDICT r13 task 6) — the case
-    where boundary states are not prefix-extensible, so the
-    :func:`_chain_boundary_states` single chain cannot fold them.
-
-    k INDEPENDENT sequential folds: boundary t_i restores the source
-    columns from saved copies, then folds ``applicable(stmts, t_i)``
-    in script order — exactly ``apply_statements`` semantics per
-    boundary (each statement sees the post-image of every earlier
-    applicable statement).  Correct for any script at k× projection
-    cost: Σ_i |applicable(t_i)| select steps, all collapsed by
-    Catalyst into one codegen stage (no joins, no per-time scans, no
-    extra shuffle — k is the number of script epochs, not rows)."""
-    base_cols = list(df.columns)
-    origs = [f"__o_{c}" for c in base_cols]
-    work = df.select(
-        *base_cols, *[F.col(c).alias(f"__o_{c}") for c in base_cols]
-    )
-    carried: list[str] = []
-    for i, t in enumerate(times):
-        # fresh fold: restore source values, reset liveness
-        work = work.select(
-            *[F.col(o).alias(c) for c, o in zip(base_cols, origs)],
-            *origs,
-            *carried,
-            F.lit(True).alias("__alive"),
-        )
-        for stmt in applicable(stmts, t):
-            cond = (
-                F.lit(True)
-                if stmt.where is None
-                else F.coalesce(F.expr(stmt.where).cast("boolean"), F.lit(False))
-            )
-            if stmt.kind == "delete":
-                work = work.select(
-                    *base_cols,
-                    *origs,
-                    *carried,
-                    (F.col("__alive") & ~cond).alias("__alive"),
-                )
-            else:
-                new = {}
-                for col, set_expr in stmt.sets:
-                    actual = next(
-                        (c for c in base_cols if c.lower() == col.lower()), col
-                    )
-                    new[actual] = F.when(
-                        cond, F.expr(set_expr).cast(field_types[actual])
-                    ).otherwise(F.col(actual))
-                work = work.select(
-                    *[new.get(c, F.col(c)).alias(c) for c in base_cols],
-                    *origs,
-                    *carried,
-                    "__alive",
-                )
-        snap = F.struct(
-            *[F.col(c).alias(c) for c in cols], F.col("__alive").alias("__alive")
-        )
-        name = f"__b{i}"
-        work = work.select(*base_cols, *origs, *carried, "__alive", snap.alias(name))
-        carried.append(name)
-    return work
+def _history_steps(stmts: list[Stmt], times: list[int]) -> list[tuple[bool, list[Stmt]]]:
+    """Per boundary ``t_i``: whether its state continues the state at
+    ``t_{i-1}``, and the statements it folds.  It continues when the
+    statements applicable at ``t_{i-1}`` are, in script order, a prefix
+    of those applicable at ``t_i`` -- every newly applicable statement
+    comes after all the old ones, the shape of an append-only log -- and
+    then folds only the new ones.  Otherwise (effective times out of
+    script order) it restores the source columns and replays
+    ``applicable(stmts, t_i)`` from scratch."""
+    steps, prev = [], []
+    for t in times:
+        now = applicable(stmts, t)
+        cont = now[: len(prev)] == prev
+        steps.append((cont, now[len(prev) :] if cont else now))
+        prev = now
+    return steps
 
 
 def scd2_history(df: DataFrame, stmts, tracked_cols: list[str] | None = None) -> DataFrame:
     """Materialize a **Type-2** history table from the Type-7 statement
     log: one row per (entity, state interval), with ``valid_from_ms`` /
-    ``valid_to_ms`` (NULL = current) and ``is_current``.
+    ``valid_to_ms`` (NULL = current) and ``is_current``.  *tracked_cols*
+    (default: every column) are the columns the output carries and the
+    only ones whose change opens a new interval.
 
     The reference keeps history *implicitly* (base + timestamped DML,
     ``README.md:24-26``); this derives the standard explicit form in a
-    **single pass**: for each distinct effective time t_i the row's
-    state is the fold of statements with effective ≤ t_i (the same
-    when/otherwise composition as ``apply_statements``), assembled into
-    an array of (t_i, state, alive) structs, de-duplicated against the
-    previous interval, and exploded.  No self-joins, no per-time scans
-    — cost is k× the projection width for k distinct times, which is
-    tiny because k = number of timestamped script epochs, not rows.
+    single pass over the rows, with no joins and no per-time scans.  The
+    boundaries are the raw state (time 0) and each distinct effective
+    time t_i; a row's state at t_i is ``apply_statements(…, as_of=t_i)``
+    of that row.  It compiles through the same statement layers as
+    :func:`apply_statements`, one nested ``spark.sql`` per chunk:
 
-    Read-after-write chains (a later statement reading a column an
-    earlier statement assigned) fold through the SEQUENTIAL select
-    chain (:func:`_chain_boundary_states`, r13) whenever script order
-    agrees with effective-time order — the append-only ``.updates``
-    shape every real log has.  Chains with OUT-OF-ORDER effective
-    times (boundary states not prefix-extensible) fold through k
-    independent per-boundary recomputes instead
-    (:func:`_independent_boundary_states`, r14) — correct for any
-    script at k× projection cost; no refusal path remains.  Chain
-    detection matches assigned columns against later statements'
-    expressions on identifier-token boundaries (not substrings), so a
-    column named ``a`` can no longer spuriously route a script whose
-    expressions merely contain the letter."""
+    - each statement is one layer; a DELETE clears a carried ``__alive``
+      flag instead of dropping the row;
+    - each boundary adds one struct column of the tracked columns and
+      ``__alive``; it continues the previous boundary's state when the
+      log is append-only up to t_i (:func:`_history_steps`) and
+      otherwise restores the source columns and replays every statement
+      applicable at t_i, so out-of-order effective times need no
+      separate path;
+    - the boundary structs form one array (``__h``) in its own
+      projection and the indices of the boundaries whose state differs
+      from the previous one (``__k``) in the next, so the lambdas that
+      turn kept boundaries into intervals read columns and Catalyst
+      builds the array once per row;
+    - the intervals are exploded and those where the row is deleted are
+      dropped; the deletion stays visible as the end of the preceding
+      interval."""
     if isinstance(stmts, str):
         stmts = parse_script(stmts)
     stmts = list(stmts)
-    # boundaries: raw state (before everything) + each distinct effective time
-    times = sorted({0 if s.effective_ms is None else s.effective_ms for s in stmts})
-    if not times or times[0] != 0:
-        times = [0, *times]
-    cols = df.columns if tracked_cols is None else tracked_cols
-    field_types = {f.name: f.dataType for f in df.schema.fields}
-
-    # Pre-image correctness: the per-boundary composed-expression path
-    # below evaluates every WHERE/SET against the *source columns*,
-    # exactly like one boundary of apply_statements — valid only when
-    # no statement reads a column an earlier statement assigned.
-    # Chains route to the sequential select chain instead.
-    import re as _re
-
-    chained = False
-    assigned: set[str] = set()
-    for stmt in stmts:
-        text = (stmt.where or "") + " " + " ".join(e for _c, e in stmt.sets)
-        # identifier-token match, not substring (VERDICT r13 §3): a
-        # column named `a` must not match inside `max` or 'data'
-        refs = set(_re.findall(r"[a-z_][a-z0-9_]*", text.lower()))
-        if assigned & refs:
-            chained = True
-            break
-        assigned.update(c.lower() for c, _e in stmt.sets)
-
-    if chained:
-        keys = [0 if s.effective_ms is None else s.effective_ms for s in stmts]
-        in_order = all(a <= b for a, b in zip(keys, keys[1:]))
-        fold = _chain_boundary_states if in_order else _independent_boundary_states
-        src = fold(df, stmts, times, cols, field_types)
-        entries = [
-            F.struct(
-                F.lit(t).alias("valid_from_ms"),
-                F.struct(
-                    *[F.col(f"__b{i}.{c}").alias(c) for c in cols]
-                ).alias("state"),
-                F.col(f"__b{i}.__alive").alias("alive"),
-            )
-            for i, t in enumerate(times)
-        ]
-    else:
-        src = df
-
-        def state_at(t_ms: int):
-            """(state struct, alive) after folding statements eff ≤ t_ms."""
-            exprs = {c: F.col(c) for c in df.columns}
-            alive = F.lit(True)
-            for stmt in applicable(stmts, t_ms):
-                cond = (
-                    F.lit(True)
-                    if stmt.where is None
-                    else F.coalesce(F.expr(stmt.where).cast("boolean"), F.lit(False))
-                )
-                if stmt.kind == "delete":
-                    alive = alive & ~cond
-                else:
-                    for col, set_expr in stmt.sets:
-                        actual = next(
-                            (c for c in df.columns if c.lower() == col.lower()), col
-                        )
-                        exprs[actual] = F.when(
-                            cond, F.expr(set_expr).cast(field_types[actual])
-                        ).otherwise(exprs[actual])
-            return F.struct(*[exprs[c].alias(c) for c in cols]), alive
-
-        entries = []
-        for t in times:
-            state, alive = state_at(t)
-            entries.append(
-                F.struct(
-                    F.lit(t).alias("valid_from_ms"),
-                    state.alias("state"),
-                    alive.alias("alive"),
-                )
-            )
-    arr = F.array(*entries)
-
-    def at(i):  # 1-based element_at over the boundary array
-        return F.element_at(arr, i)
-
-    # keep boundary i iff its (state, alive) differs from boundary i-1
-    idx = F.sequence(F.lit(1), F.lit(len(times)))  # 1-based positions
-    keep = F.filter(
-        idx,
-        lambda i: F.when(i == 1, F.lit(True)).otherwise(
-            (at(i)["state"] != at(i - 1)["state"])
-            | (at(i)["alive"] != at(i - 1)["alive"])
-        ),
-    )
-    # each kept boundary becomes an interval ending at the next kept one
-    versions = F.transform(
-        keep,
-        lambda i, pos: F.struct(
-            at(i)["valid_from_ms"].alias("valid_from_ms"),
-            F.when(
-                F.try_element_at(keep, pos + 2).isNull(), F.lit(None).cast("long")
-            )
-            .otherwise(
-                at(F.coalesce(F.try_element_at(keep, pos + 2), F.lit(1)))[
-                    "valid_from_ms"
-                ]
-            )
-            .alias("valid_to_ms"),
-            at(i)["state"].alias("state"),
-            at(i)["alive"].alias("alive"),
-        ),
-    )
-    exploded = src.select(F.explode(versions).alias("__v"))
-    out = exploded.select(
-        *[F.col(f"__v.state.{c}").alias(c) for c in cols],
-        F.col("__v.valid_from_ms").alias("valid_from_ms"),
-        F.col("__v.valid_to_ms").alias("valid_to_ms"),
-        F.col("__v.alive").alias("alive"),
-    )
-    # an interval where the row is deleted = the entity doesn't exist
-    # then; dropping it still leaves the deletion visible as the end of
-    # the preceding interval
-    out = out.filter(F.col("alive")).drop("alive")
-    return out.withColumn("is_current", F.col("valid_to_ms").isNull())
+    # boundaries: time 0 + each later distinct effective time; a statement
+    # timed before 0 applies at every as-of >= 0, so it opens none
+    times = sorted({0, *(max(s.effective_ms or 0, 0) for s in stmts)})
+    cols = df.columns if tracked_cols is None else list(tracked_cols)
+    types = {f.name: _sql_type(f.dataType) for f in df.schema.fields}
+    steps = _history_steps(stmts, times)
+    origs = {c: f"__o{j}" for j, c in enumerate(types)}
+    restore = not all(cont for cont, _todo in steps)
+    carried = [_ALIVE, *(origs.values() if restore else ())]
+    init = [f"{_quote(c)} AS {_quote(o)}" for c, o in origs.items()] if restore else []
+    layers = [(f"SELECT *, {', '.join([*init, f'true AS {_quote(_ALIVE)}'])} FROM", "")]
+    state = ", ".join(_quote(c) for c in [*cols, _ALIVE])
+    for i, (cont, todo) in enumerate(steps):
+        if not cont:
+            back = [f"{_quote(o)} AS {_quote(c)}" for c, o in origs.items()]
+            keep = [_quote(c) for c in carried[1:]]
+            layers.append((f"SELECT {', '.join([*back, *keep, f'true AS {_quote(_ALIVE)}'])} FROM", ""))
+        layers += [_statement_layer(stmt, types, carried) for stmt in todo]
+        layers.append((f"SELECT *, struct({state}) AS `__b{i}` FROM", ""))
+        carried.append(f"__b{i}")
+    boundaries = ", ".join(f"`__b{i}`" for i in range(len(times)))
+    layers.append((f"SELECT array({boundaries}) AS `__h` FROM", ""))
+    starts = f"array({', '.join(f'{t}L' for t in times)})"
+    out = [f"`__v`.`state`.{_quote(c)} AS {_quote(c)}" for c in cols] + [
+        "`__v`.`valid_from_ms` AS `valid_from_ms`",
+        "`__v`.`valid_to_ms` AS `valid_to_ms`",
+        "`__v`.`valid_to_ms` IS NULL AS `is_current`",
+    ]
+    layers += [
+        (f"SELECT `__h`, filter(sequence(0, {len(times) - 1}),"
+         " i -> i = 0 OR `__h`[i] != `__h`[i - 1]) AS `__k` FROM", ""),
+        ("SELECT explode(transform(`__k`, (i, p) -> named_struct("
+         f"'state', `__h`[i], 'valid_from_ms', {starts}[i], 'valid_to_ms', "
+         f"CASE WHEN p + 1 < size(`__k`) THEN {starts}[`__k`[p + 1]] END))) AS `__v` FROM", ""),
+        (f"SELECT {', '.join(out)} FROM", f"WHERE `__v`.`state`.{_quote(_ALIVE)}"),
+    ]
+    return _run_layers(df, layers, stmts)
 
 
 def compact(

@@ -1,9 +1,10 @@
-"""Build / plan / exec time of ``apply_statements`` by statement-log length.
+"""Build / plan / exec time of ``apply_statements`` (or, with
+``--history``, of ``scd2_history``) by statement-log length.
 
 Usage::
 
     SPARK_GRAFT_CPUS=4 python scripts/scd_build_curve.py \
-        --sf-dir <tpch sf dir with customer.parquet> --n 1,10,46,100,300 --reps 3
+        --sf-dir <tpch sf dir with customer.parquet> --n 1,10,46,100,300 --reps 3 [--history]
 
 The log is append-only: one ``-- time=`` per statement, in a fixed
 rotation of nine UPDATEs and one DELETE over ``customer`` (the DELETE is
@@ -11,12 +12,15 @@ keyed on ``c_custkey``, a column no UPDATE assigns).  For each N, after
 one untimed warm-up fold, every rep measures three wall times in one
 warm session and the medians are printed as one JSON line:
 
-- ``build_s``: ``apply_statements`` (parse, compile, Catalyst analysis);
+- ``build_s``: ``apply_statements`` (parse, compile, Catalyst analysis),
+  or ``scd2_history`` with ``--history`` (one boundary per statement,
+  N + 1 in all);
 - ``plan_s``: optimisation and physical planning (``executedPlan``);
-- ``exec_s``: a collected ``GROUP BY c_nationkey`` aggregate.
+- ``exec_s``: a collected ``GROUP BY c_nationkey`` aggregate (over the
+  history's intervals with ``--history``).
 
-Only the public ``apply_statements`` entry point is used, so the same
-script measures any revision of the package on ``PYTHONPATH``.
+Only the public entry points are used, so the same script measures any
+revision of the package on ``PYTHONPATH``.
 """
 
 from __future__ import annotations
@@ -33,7 +37,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from hive_scd_spark import apply_statements  # noqa: E402
+from hive_scd_spark import apply_statements, scd2_history  # noqa: E402
 from hive_scd_spark.session import get_spark  # noqa: E402
 
 SEGMENTS = ["AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY"]
@@ -67,13 +71,13 @@ def script(n: int, seed: int = 0) -> str:
     return "".join(f"-- time={i + 1}\n{statement(rng, i)}\n" for i in range(n))
 
 
-def measure(base, n: int, reps: int) -> dict:
+def measure(base, n: int, reps: int, fold) -> dict:
     text = script(n)
-    apply_statements(base, text, as_of=None)  # warm-up
+    fold(base, text)  # warm-up
     build, plan, run = [], [], []
     for _ in range(reps):
         t0 = time.perf_counter()
-        df = apply_statements(base, text, as_of=None)
+        df = fold(base, text)
         t1 = time.perf_counter()
         agg = df.groupBy("c_nationkey").agg(F.count(F.lit(1)), F.sum("c_acctbal"))
         agg._jdf.queryExecution().executedPlan()
@@ -97,13 +101,15 @@ def main() -> None:
     ap.add_argument("--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR"))
     ap.add_argument("--n", default="1,10,46,100,300")
     ap.add_argument("--reps", type=int, default=3)
+    ap.add_argument("--history", action="store_true", help="measure scd2_history")
     args = ap.parse_args()
     if not args.sf_dir:
         ap.error("--sf-dir (or SPARK_GRAFT_SF_DIR) is required")
     spark = get_spark("scd_build_curve")
     base = spark.read.parquet(os.path.join(args.sf_dir, "customer.parquet"))
+    fold = scd2_history if args.history else apply_statements
     for n in (int(x) for x in args.n.split(",")):
-        print(json.dumps(measure(base, n, args.reps)), flush=True)
+        print(json.dumps(measure(base, n, args.reps, fold)), flush=True)
     spark.stop()
 
 

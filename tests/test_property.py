@@ -162,6 +162,34 @@ def test_chunk_depth_follows_analyzer_max_iterations(spark):
 
 
 @settings(
+    max_examples=3,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(program=st.lists(st.tuples(st.sampled_from(LONG_POOL), st.integers(0, 3)),
+                        min_size=46, max_size=70))
+def test_scd2_history_long_scripts_match_apply_statements(spark, program):
+    """History ≡ apply_statements at every boundary for logs longer than
+    a chunk.  At maxIterations=20 a chunk is a few layers deep, so the
+    history's statement, restore and boundary layers span many chunks;
+    the random times put most statements out of script order."""
+    from hive_scd_spark.scd import scd2_history
+
+    session = spark.newSession()
+    session.conf.set("spark.sql.analyzer.maxIterations", "20")
+    rows = [(True, 5, 7, 1.5, 3.5, "hello"), (None, -3, None, 100.0, 0.0, ""),
+            (False, 60, 1, None, 1e6, "abc"), (None, None, None, 0.0, None, None)]
+    df = session.createDataFrame(rows, SCHEMA)
+    script = build_script(program)
+    hist = scd2_history(df, script).collect()
+    for t in range(4):
+        got = [tuple(r[c] for c in COLS) for r in hist
+               if r.valid_from_ms <= t and (r.valid_to_ms is None or r.valid_to_ms > t)]
+        want = [tuple(r) for r in apply_statements(df, script, as_of=t).collect()]
+        assert canon(got) == canon(want), f"divergence at t={t}"
+
+
+@settings(
     max_examples=8,
     deadline=None,
     suppress_health_check=[HealthCheck.function_scoped_fixture],

@@ -1,8 +1,7 @@
 """Property tests for the round-14 operators: envelope-hash
 invariances over arbitrary payloads, and scd2_history ≡
-apply_statements at every boundary for randomized scripts regardless
-of which fold path (composed / sequential chain / per-boundary
-recompute) the router picks."""
+apply_statements at every boundary for randomized scripts, whether
+each boundary continues the previous state or restores and replays."""
 
 from __future__ import annotations
 
@@ -46,7 +45,7 @@ def test_audio_hash_invariant_under_volume(payload, k):
     assert h1 == h2
 
 
-# --- scd2_history routing property -----------------------------------------
+# --- scd2_history property -----------------------------------------
 
 _COLS = ["a", "b"]
 
@@ -55,7 +54,8 @@ _COLS = ["a", "b"]
 def scripts(draw):
     """Small random scripts mixing chained/unchained updates + deletes
     with arbitrary (possibly out-of-order, possibly duplicate)
-    effective times — exercising all three scd2_history fold paths."""
+    effective times — boundaries that continue the chain and boundaries
+    that restore the source columns and replay."""
     n = draw(st.integers(min_value=1, max_value=4))
     stmts = []
     for _ in range(n):

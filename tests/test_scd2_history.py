@@ -148,21 +148,15 @@ def test_chain_out_of_order_folds_per_boundary(spark, dim):
 
 
 def test_chain_detector_is_token_bounded(spark):
-    """r14: the chain detector matches identifier tokens, not
-    substrings — a column named `a` inside the identifier `ab` (or a
-    string literal) must not route a NON-chained out-of-order script
-    through the per-boundary recompute spuriously.  Both paths are
-    correct, so pin behavior via the composed pre-image semantics that
-    only the non-chained path exhibits structurally: the script below
-    is NOT a chain, and its result must match apply_statements."""
+    """Out-of-order times where a later statement reads a column whose
+    name merely contains an assigned one (`ab` vs `a`).  An earlier
+    substring-based chain detector refused this script; the history
+    must match apply_statements."""
     from hive_scd_spark.scd import apply_statements
 
     dim2 = spark.createDataFrame(
         [(1, 10.0, 2.0), (2, 20.0, 3.0)], "id int, a double, ab double"
     )
-    # out-of-order times; stmt 2 references `ab`, never `a` — with the
-    # old substring detector this flagged chained + out-of-order and
-    # REFUSED; token matching routes it through the composed fold
     script = (
         "-- time=2000\nUPDATE t SET a = 99 WHERE id = 1;\n"
         "-- time=1000\nUPDATE t SET ab = ab * 2 WHERE id = 2;\n"
@@ -176,6 +170,15 @@ def test_chain_detector_is_token_bounded(spark):
         for r in apply_statements(dim2, script, as_of=99999).collect()
     )
     assert cur == exp == [(1, 99.0, 2.0), (2, 20.0, 6.0)]
+
+
+def test_negative_effective_time_applies_from_zero(spark, dim):
+    """A statement timed before 0 applies at every as-of >= 0
+    (``applicable``), so the history starts with its effect and opens no
+    interval at a negative time."""
+    hist = scd2_history(dim, "-- time=-5\nUPDATE t SET bal = 1 WHERE id = 1;\n")
+    rows = [(r.bal, r.valid_from_ms, r.valid_to_ms) for r in hist.filter("id = 1").collect()]
+    assert rows == [(1.0, 0, None)]
 
 
 def test_untimed_chain_folds(spark, dim):
@@ -208,3 +211,49 @@ def test_asof_consistency_with_apply_statements(spark, dim):
             (r.id, r.name, r.bal) for r in apply_statements(dim, SCRIPT, as_of=t).collect()
         )
         assert from_hist == from_apply, f"divergence at t={t}"
+
+
+def _timed(n):
+    """n timed statements (n + 1 boundaries), each reading the
+    post-image of the one before."""
+    return "".join(
+        f"-- time={1000 * (i + 1)}\nUPDATE t SET bal = bal + {i} WHERE id = {i % 3 + 1};\n"
+        for i in range(n)
+    )
+
+
+@pytest.mark.parametrize("n_stmts", [4, 16])
+def test_boundary_array_built_once(spark, dim, n_stmts):
+    """The boundary array is one projection and the keep list the next,
+    so the optimized plan holds one ``array(`` and one ``filter(`` at 5
+    and at 17 boundaries (an inlined array showed 16 and 3 at 5
+    boundaries)."""
+    plan = scd2_history(dim, _timed(n_stmts))._jdf.queryExecution().optimizedPlan().toString()
+    assert (plan.count("array("), plan.count("filter(")) == (1, 1)
+
+
+def test_update_of_unknown_column_raises_value_error(spark, dim):
+    with pytest.raises(ValueError, match="unknown column 'nope'"):
+        scd2_history(dim, "-- time=1000\nUPDATE t SET nope = 1 WHERE id = 1;\n")
+
+
+def test_where_that_is_not_one_expression_raises_and_runs_nothing(spark, dim):
+    sc = spark.sparkContext
+    sc.setJobGroup("history-splice-check", "jobs started by a rejected history statement")
+    try:
+        with pytest.raises(Exception, match="PARSE_SYNTAX_ERROR"):
+            scd2_history(dim, "-- time=1000\nDELETE FROM t WHERE id = 1) x UNION ALL SELECT 1 AS id FROM (SELECT 1;\n")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("history-splice-check") == []
+
+
+def test_untracked_change_opens_no_interval(spark, dim):
+    script = (
+        "-- time=1000\nUPDATE t SET bal = 0 WHERE id = 1;\n"
+        "-- time=2000\nUPDATE t SET name = 'ALICE' WHERE id = 1;\n"
+    )
+    hist = scd2_history(dim, script, tracked_cols=["id", "name"])
+    assert hist.columns == ["id", "name", "valid_from_ms", "valid_to_ms", "is_current"]
+    alice = sorted(tuple(r) for r in hist.filter("id = 1").collect())
+    assert alice == [(1, "ALICE", 2000, None, True), (1, "alice", 0, 2000, False)]
