@@ -16,9 +16,11 @@ record: logs/bench_last.json is written by the SAME run whose stdout
 tail the driver captures into BENCH_r{N}.json — builders must not
 commit separately-run round-named bench logs.
 
-Execution is measured with the built-in `noop` sink so the full plan
-runs (scan → transform → exchange) without driver-side collection —
-`count()` would let Catalyst prune the very projections we're timing.
+Every row is timed the same way (session.time_noop, shared with
+scripts/scale.py): builder plus action into the built-in `noop` sink,
+so build-time jobs (pins, checkpoints, seed collects, schema inference)
+count, and the full plan runs without a driver-side collect.  The
+artifact says so ("timing": "builder+action").
 
 Accounting note (VERDICT r6 nit 2): `dedup_cluster_assign` reads the
 session-persisted MinHash pair cache (queries.shared_minhash_pairs), so
@@ -33,13 +35,13 @@ from __future__ import annotations
 import json
 import math
 import os
+import re
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from hive_scd_spark.queries import QUERIES  # noqa: E402
-from hive_scd_spark.session import get_spark  # noqa: E402
+from hive_scd_spark.session import get_spark, time_noop  # noqa: E402
 
 # Headline set: the flagship SCD query, the heaviest host-SQL shapes,
 # and one of each extension family (dedup/similarity/text/events).
@@ -141,9 +143,7 @@ HEADLINE = [
     # round-12 session 2: the frequent-items sketch (MG candidates +
     # exact broadcast recount), the KN trigram LM (train src0+src1,
     # score 18 sources — the KenLM-class CCNet filter), and PQ ANN
-    # (4 subspace k-means trainings + ADC shortlist + exact rerank;
-    # builder is pure plan construction except the 4 metadata-sized
-    # seed collects, which stay untimed like ivf_cosine_topk's)
+    # (4 subspace k-means trainings + ADC shortlist + exact rerank)
     "sketch_heavy_hitters",
     "text_kn_trigram_logprob",
     "ann_pq_adc_topk",
@@ -176,206 +176,91 @@ HEADLINE = [
     # contamination matrix (gram shuffle + source-bounded pair fan-out)
     "events_anomaly_zscore",
     "report_source_overlap",
-    # round-14 (rotate-on-add): out-of-order chain SCD2 fold (plan-pure
-    # builder) and perceptual near-dup media (banded-Hamming over stub
-    # dHash; lazy band checkpoint -> builder-timed, the simhash rule)
+    # round-14 (rotate-on-add): out-of-order chain SCD2 fold and
+    # perceptual near-dup media (banded-Hamming over stub dHash)
     "scd2_chain_outoforder",
     "multimodal_dedup_near",
     # round-14 second tranche: the media-family dedup endgame (pairs ->
-    # clusters -> keepers; dup_clusters localCheckpoints per CC round,
-    # the dedup_winnow_corpus rule -> builder-timed)
+    # clusters -> keepers)
     "multimodal_dedup_near_corpus",
-    # round-14 third tranche: audio perceptual near-dup (same
-    # checkpointed band join -> builder-timed)
+    # round-14 third tranche: audio perceptual near-dup
     "multimodal_dedup_near_audio",
     # round-14 fourth tranche: video frame-hash near-dup (winnow
-    # inverted-index idiom; plan-pure builder)
+    # inverted-index idiom)
     "multimodal_dedup_near_video",
-    # round-15 (rotate-on-add): IVF x PQ composed ANN serving (codebook
-    # training actions sit inside the builder -> builder-timed)
+    # round-15 (rotate-on-add): IVF x PQ composed ANN serving
     "ann_ivf_pq_topk",
     # round-15 second tranche: the frozen-index incremental serving
-    # loop (state build in-gate -> builder-timed, the ann_pq_incremental
-    # rule; the AMORTIZED arrival cost is the scale artifacts' row)
+    # loop (state built in-gate; the AMORTIZED arrival cost is the
+    # scale artifacts' row)
     "ann_ivf_pq_incremental",
 ]
 assert not {"dedup_ngram_jaccard", "dedup_embedding_cosine"} & set(HEADLINE)
 
-# Rows that run 4 timed reps instead of 2 (VERDICT r10 task 6, rule
-# widened per VERDICT r11 task 8): the 10 most expensive rows of the
-# LAST round's bench ∪ any common-query mover > 1.3× vs the round
-# before — so verdict attention never goes to a sub-second row whose
-# swing was reps=2 noise.  Recomputed each round from BENCH_r{N-1}.
-# r13 inputs: top-10 by BENCH_r12 (ann_pq_adc_topk 4.71,
-# pipeline_semantic_dedup 4.59, pipeline_scrub_classify_report 4.21,
-# pipeline_crawl_to_corpus_v2 4.16, graph_pagerank_dups 4.14,
-# dedup_minhash_incremental 3.67, dedup_winnow_corpus 3.65,
-# pipeline_corpus_to_sequences 3.23, text_kn_trigram_logprob 3.16,
-# dedup_simhash_near 3.13); movers vs r11 (the VERDICT r12 list) =
-# sample_shuffle_order (1.90×), range_join_event_windows (1.57×),
-# dedup_cluster_assign (1.56×), dedup_minhash_incremental (1.47×).
-EXTRA_REPS = {
-    # r16 inputs: top-10 by BENCH_r15 (ann_ivf_pq_incremental 7.23,
-    # ann_ivf_pq_topk 6.87, ann_pq_incremental 6.61, ann_pq_adc_topk
-    # 5.95, pipeline_semantic_dedup 5.39, pipeline_crawl_to_corpus_v2
-    # 5.13, select_dsir_weights 5.07, text_kn_trigram_logprob 4.32,
-    # pipeline_scrub_classify_report 4.14, dedup_minhash_lsh 4.09)
-    "ann_ivf_pq_incremental",
-    "ann_ivf_pq_topk",
-    "ann_pq_incremental",
-    "ann_pq_adc_topk",
-    "pipeline_semantic_dedup",
-    "pipeline_crawl_to_corpus_v2",
-    "select_dsir_weights",
-    "text_kn_trigram_logprob",
-    "pipeline_scrub_classify_report",
-    "dedup_minhash_lsh",
-    # ... union the r15 movers: every common-set row in PERF_r15 whose
-    # max(speedup, 1/speedup) exceeded the r15 noise bound 1.323 —
-    # mostly the four pinned-gate regressions this round recovers plus
-    # the rows r15's own rep rotation demoted to min-of-4 (VERDICT r15
-    # task 5 diagnosed those as phantom movers; 4 reps pins them down)
-    "text_bigram_logprob",
-    "text_unigram_logprob",
-    "scd2_chain_outoforder",
-    "report_source_divergence",
-    "report_source_overlap",
-    "multimodal_dedup_near",
-    "multimodal_dedup_near_audio",
-    "pipeline_mix_shuffle_pack",
-    "text_remove_boilerplate",
-    "text_span_scrub",
-}
-assert EXTRA_REPS <= set(HEADLINE)
-
-# The PRIOR round's committed EXTRA_REPS set (VERDICT r15 task 5a: a
-# cross-round per-query comparison is invalid for rows whose rep count
-# changed — min-of-8 vs min-of-4 across the two sessions biases
-# exactly those rows — so the artifact must carry the delta itself).
-PREV_EXTRA_REPS = {
-    "pipeline_scrub_classify_report",
-    "ann_pq_incremental",
-    "pipeline_semantic_dedup",
-    "ann_pq_adc_topk",
-    "pipeline_crawl_to_corpus_v2",
-    "dedup_minhash_lsh",
-    "dedup_minhash_incremental",
-    "graph_pagerank_dups",
-    "pipeline_corpus_to_sequences",
-    "dedup_winnow_corpus",
-    "range_join_event_windows",
-    "sample_shuffle_order",
-    "text_quality_stats",
-}
-REPS_CHANGED = sorted(EXTRA_REPS ^ PREV_EXTRA_REPS)
+ROOT = os.path.dirname(os.path.abspath(__file__))
 
 
-# Iterative operators run their convergence loop (Spark actions) inside
-# the query BUILDER — for these the builder must sit inside the timed
-# window or the measurement would only see the final cached write.
-# Every other builder is pure plan construction and stays untimed, so
-# per-query numbers remain comparable with BENCH_r01/r02.
-ITERATIVE = {
-    "dedup_cluster_assign",
-    # distributed_rank pins its range-partitioned layout with a
-    # localCheckpoint (exchange-reuse correctness, ADVICE r3#1); under
-    # AQE that materializes stages at BUILD time, so the builder must
-    # sit inside the timed window for the number to stay honest
-    "shard_assignment",
-    # distributed_prefix_sum collects per-partition totals at build time
-    "pack_sequences_ctx",
-    "pipeline_corpus_to_sequences",
-    # corpus.count() for auto plane sizing + lazy checkpoint at build
-    "pipeline_semantic_dedup",
-    # r6 accounting correction: ANY lazy localCheckpoint materializes
-    # its upstream stages at BUILD time (the df→RDD conversion under
-    # AQE runs query stages), so a builder-untimed measurement skips
-    # that work entirely — measured: minhash build 1.22 s + write
-    # 1.13 s; pagerank build 3.32 s + write 0.04 s.  These three were
-    # under-reporting; their numbers STEP UP vs earlier rounds by the
-    # build cost (an accounting fix, not a regression).
-    "dedup_minhash_lsh",
-    "dedup_minhash_incremental",
-    "graph_pagerank_dups",
-    # r7: the band table is lazily checkpointed (self-join reuse)
-    "dedup_simhash_near",
-    # r7: the builder's min/max .first() (sketch range) is an action
-    "sketch_quantile_totalprice",
-    # r7: bloom_to_hex collects the nibble rows at build time
-    "decontam_bloom_screen",
-    # r11: dup_clusters inside dedup_corpus localCheckpoints per round
-    "dedup_winnow_corpus",
-    # r11: distributed_rank pins its ranged layout with a localCheckpoint
-    # and collects partition COUNTS at build (the shard_assignment rule)
-    "sample_shuffle_order",
-    # r12: composes shuffle_corpus (distributed_rank) + pack_sequences
-    # (distributed_prefix_sum) — both collect partition counts at build
-    "pipeline_mix_shuffle_pack",
-    # r12 session 2: the 4 subspace k-means trainings collect their
-    # metadata-sized seed rows at build time (4 small topK jobs) — the
-    # training cost belongs inside the timed window
-    "ann_pq_adc_topk",
-    # r13: trains frozen codebooks on the standing corpus at build (the
-    # same seed collects) — the state-build cost stays inside the timer
-    # so the row is the honest one-off arrival cost; the AMORTIZED
-    # arrival cost is the scale artifacts' pq_incr rows (persisted
-    # state, 0.96× @10x)
-    "ann_pq_incremental",
-    # r13: heavy_hitters' rollup output is lazily localCheckpoint-ed
-    # (the two-consumer fix from the r12 ADVICE) — the same df→RDD
-    # materialize-at-build rule as minhash/pagerank applies, so the
-    # builder moves inside the timer (first timed r13 run measured the
-    # row at 0.10 s builder-untimed — an accounting artifact, not a
-    # 24× speedup; honest number ~2.3 s)
-    "sketch_heavy_hitters",
-    # r13: nb_logodds lazily checkpoints its (V+1)-row model (three
-    # nb_score references would otherwise re-derive the reference
-    # counting pipeline per reference) — same rule, builder-timed
-    "select_nb_quality",
-    "pipeline_scrub_classify_report",
-    # r13: the overlap matrix checkpoints its gram-grouped inverted
-    # index (feeds both pair generation and totals) — same rule
-    "report_source_overlap",
-    # r14: banded_hamming_pairs lazily checkpoints the band table (the
-    # dedup_simhash_near rule)
-    "multimodal_dedup_near",
-    # r14: dup_clusters localCheckpoints per CC round inside
-    # dedup_corpus (the dedup_winnow_corpus rule)
-    "multimodal_dedup_near_corpus",
-    "multimodal_dedup_near_audio",
-    # r15: the composed IVF x PQ gate trains its PQ codebooks at build
-    # (the ann_pq_adc_topk seed-collect rule); the incremental gate
-    # additionally builds its frozen state tables in-gate
-    "ann_ivf_pq_topk",
-    "ann_ivf_pq_incremental",
-    # r15 OPTIMIZATION round: the LM scoring operators gained lazy
-    # model-table pins (vocab / count tables / per-doc stream — each
-    # was re-derived once per broadcast reference; see
-    # operators/quality.py).  ANY lazy localCheckpoint materializes at
-    # BUILD time under AQE, so these three move into the builder-timed
-    # set — the same accounting rule as sketch_heavy_hitters (r13).
-    # Total measured work per row is UNCHANGED (builder + action
-    # together still cover the whole computation).
-    "text_unigram_logprob",
-    "text_bigram_logprob",
-    "text_kn_trigram_logprob",
-    # r15 OPTIMIZATION round: DSIR pins its grouped (doc, bucket) table
-    # + both bucket models (the raw-pool feature explode ran twice, and
-    # each ≤ n_buckets model table was re-derived per broadcast
-    # reference) — same builder-timed accounting move as the LM gates.
-    "select_dsir_weights",
-}
+def _artifact(name: str) -> dict | None:
+    try:
+        with open(os.path.join(ROOT, name)) as f:
+            return json.load(f)
+    except FileNotFoundError:
+        return None
+
+
+def extra_reps(rnd: int) -> set[str] | None:
+    """Rows that run 4 timed reps instead of 2 in the round after *rnd*:
+    the 10 most expensive rows of the last JSON line of
+    ``BENCH_r<rnd>.json``'s driver tail, plus every row of
+    ``PERF_r<rnd>.json`` whose max(speedup, 1/speedup) exceeds that
+    line's ``noise_bound``, intersected with HEADLINE -- so attention
+    never goes to a row whose swing was reps=2 noise.  None when either
+    input file is missing."""
+    bench = _artifact(f"BENCH_r{rnd:02d}.json")
+    perf = _artifact(f"PERF_r{rnd:02d}.json")
+    if bench is None or perf is None:
+        return None
+    last = json.loads(bench["tail"].strip().splitlines()[-1])
+    times = last["queries"]
+    top = sorted(times, key=lambda k: -times[k])[:10]
+    bound = last["noise_bound"]
+    movers = [
+        k for k, v in perf["per_query"].items()
+        if v.get("speedup") and max(v["speedup"], 1 / v["speedup"]) > bound
+    ]
+    return (set(top) | set(movers)) & set(HEADLINE)
+
+
+def rep_plan() -> dict:
+    """The artifact's timing and rep fields, from the latest
+    ``BENCH_r<N>.json`` and the round before it: ``reps_extra`` (rows
+    run 4 times, :func:`extra_reps` of round N) and
+    ``reps_changed_vs_prev`` (rows whose rep count changed vs round N-1:
+    a cross-round comparison of those rows is min-of-8 vs min-of-4
+    bias, not a mover).  A field whose input files are missing is left
+    out and the files are named in ``reps_inputs_missing``."""
+    rnd = max(
+        (int(m.group(1)) for f in os.listdir(ROOT)
+         if (m := re.fullmatch(r"BENCH_r(\d+)\.json", f))),
+        default=0,
+    )
+    now, prev = extra_reps(rnd), extra_reps(rnd - 1)
+    plan: dict = {"timing": "builder+action", "reps": 2}
+    if now is not None:
+        plan["reps_extra"] = {"reps": 4, "queries": sorted(now)}
+        if prev is not None:
+            plan["reps_changed_vs_prev"] = sorted(now ^ prev)
+    missing = [
+        f"{kind}_r{r:02d}.json" for r in (rnd, rnd - 1) for kind in ("BENCH", "PERF")
+        if _artifact(f"{kind}_r{r:02d}.json") is None
+    ]
+    if missing:
+        plan["reps_inputs_missing"] = missing
+    return plan
 
 
 def run_query(spark, name: str, sf_dir: str) -> float:
-    if name in ITERATIVE:
-        t0 = time.perf_counter()
-        df = QUERIES[name](spark, sf_dir)
-    else:
-        df = QUERIES[name](spark, sf_dir)
-        t0 = time.perf_counter()
-    df.write.format("noop").mode("overwrite").save()
-    return time.perf_counter() - t0
+    return time_noop(lambda: QUERIES[name](spark, sf_dir))
 
 
 def run_session() -> dict:
@@ -412,11 +297,13 @@ def run_session() -> dict:
     # Timed reps, per-query MIN: this box shows ±20-80% swings on
     # identical code between back-to-back runs (co-tenant interference).
     # The min of isolated runs is the standard latency-benchmark answer
-    # to one-sided noise.  2 reps for cheap rows; 4 for EXTRA_REPS.
+    # to one-sided noise.  2 reps for cheap rows; 4 for reps_extra.
+    plan = rep_plan()
+    extra = set(plan.get("reps_extra", {}).get("queries", ()))
     timings: dict[str, float] = {}
     for rep in range(4):
         for name in HEADLINE:
-            if name in errors or (rep >= 2 and name not in EXTRA_REPS):
+            if name in errors or (rep >= 2 and name not in extra):
                 continue
             isolate()
             try:
@@ -434,9 +321,7 @@ def run_session() -> dict:
         "unit": "sec",
         "queries": timings,
         "sf": float(sf),
-        "reps": 2,
-        "reps_extra": {"reps": 4, "queries": sorted(EXTRA_REPS)},
-        "reps_changed_vs_prev": REPS_CHANGED,
+        **plan,
     }
     if errors:
         full["errors"] = errors
@@ -485,9 +370,7 @@ def merge_sessions(fulls: list[dict]) -> dict:
         "unit": "sec",
         "queries": timings,
         "sf": fulls[0].get("sf") if fulls else None,
-        "reps": 2,
-        "reps_extra": {"reps": 4, "queries": sorted(EXTRA_REPS)},
-        "reps_changed_vs_prev": REPS_CHANGED,
+        **rep_plan(),
         "sessions": len(fulls),
         "envelope": {
             "session_totals": [
@@ -529,6 +412,7 @@ def emit(full: dict) -> int:
     out = {
         "queries": {k: round(v, 2) for k, v in full["queries"].items()},
         "sf": full.get("sf"),
+        "timing": "builder+action",
         "reps": 2,
         # rotation-proofing (VERDICT r15 task 5a): how many rows run 4
         # reps this round and how many rows' rep count CHANGED vs the
@@ -538,8 +422,11 @@ def emit(full: dict) -> int:
         # "reps_changed_vs_prev"); the tail carries counts because all
         # 75 query rows already cannot fit the 2000-byte window (75
         # names alone serialize to ~2.2 KB — see tail_safe_line).
-        "reps4": len(EXTRA_REPS),
-        "reps_changed": len(REPS_CHANGED),
+        "reps4": len(full.get("reps_extra", {}).get("queries", ())),
+        **(
+            {"reps_changed": len(full["reps_changed_vs_prev"])}
+            if "reps_changed_vs_prev" in full else {}
+        ),
         "sessions": full.get("sessions", 1),
         "noise_bound": (full.get("envelope") or {}).get("noise_bound"),
         "metric": "headline_queries_total_runtime",

@@ -33,8 +33,8 @@ sf0.001 and at 100 TB, never data- or scale-conditional).
 Accounting note (bench contract): BOTH mechanisms run Spark actions at
 plan-build time (the collect is an action; a lazy checkpoint
 materializes its upstream stages during the df→RDD conversion under
-AQE), so every bench gate whose builder calls a pinned operator sits
-in bench.py's builder-timed (ITERATIVE) set.
+AQE); bench.py and scripts/scale.py time builder plus action for
+every row, so that work is inside the measured window.
 """
 
 from __future__ import annotations

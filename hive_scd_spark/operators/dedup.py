@@ -961,8 +961,8 @@ def banded_hamming_pairs(
     # under AQE (same pathology as minhash_near_dup_pairs; verified
     # here too — the static plan shows the explode + 30-packed-aggregate
     # fingerprint pipeline twice).  eager=False keeps materialization
-    # inside the first action, so bench accounting stays honest
-    # (ITERATIVE rule); the second join side reads cached blocks.
+    # inside the first action (bench.py times builder plus action);
+    # the second join side reads cached blocks.
     banded = (
         banded.withColumn("__n", bucket_n)
         .filter(F.col("__n") <= max_bucket)

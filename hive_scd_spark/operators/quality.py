@@ -524,11 +524,12 @@ def bigram_logprob(
     # (V+1)²-bounded, so the pin is model-table-sized (r15).  ctx is
     # derived FROM bi (Σ_w2 c(w1,w2) ≡ count of train pairs per w1 —
     # integer-identical) so the train instance stream is scanned once.
-    # r16: pin_model_table — the (V+1)² bound exceeds the collect
-    # threshold at any realistic V, so this stays an executor-side
-    # lazy checkpoint (measured r16: a 16k+-row LocalRelation is
-    # re-shipped per consumer stage and loses to checkpoint blocks
-    # at both sf0.1 and 100×; see operators/_materialize.py).
+    # r16: pin_model_table routes by the (V+1)² bound — a driver
+    # collect while it fits MATERIALIZE_ROW_BOUND (V ≤ 63, so the
+    # gates' V=30 bigram table of ≤ 961 rows is collected), an
+    # executor-side lazy checkpoint above (measured r16: a 16k+-row
+    # LocalRelation is re-shipped per consumer stage and loses to
+    # checkpoint blocks; see operators/_materialize.py).
     bi = pin_model_table(
         train_pairs.groupBy("__w1", "__w2").agg(F.count("*").alias("__bc")),
         row_bound=(vocab_size + 1) ** 2,
@@ -780,9 +781,8 @@ def kn_trigram_logprob(
     # vocab join → window → count) re-derived once per reference.
     # Both tables are trigram-TYPE-bounded (vocabulary-clipped ⇒
     # ≤ (V+1)³ rows), so these are the nb_logodds model-checkpoint
-    # precedent, not corpus materializations.  Accounting: the pin
-    # runs actions at build, so the bench gate sits in the
-    # builder-timed (ITERATIVE) set — total measured work unchanged.
+    # precedent, not corpus materializations.  The pin runs actions
+    # at build; bench.py times builder plus action.
     # r16: pin_model_table — the (V+1)³ bound exceeds the collect
     # threshold even for clipped vocabularies (V=30 ⇒ 29,791), so
     # this stays an executor-side lazy checkpoint (measured r16:
@@ -939,9 +939,8 @@ def nb_logodds(
     composition first shipped un-checkpointed).  The model is
     (V+1)-row metadata, so the pin is model-table-sized, not a corpus
     materialization — and the driver collect skips the checkpoint's
-    fixed df→RDD build cost (operators/_materialize.py).  Accounting:
-    the pin runs actions at BUILD time, so NB gates sit in bench.py's
-    builder-timed (ITERATIVE) set.  EAGER at call time (ADVICE r15):
+    fixed df→RDD build cost (operators/_materialize.py).  The pin runs
+    actions at BUILD time.  EAGER at call time (ADVICE r15):
     training runs during this call, not at first downstream action."""
     model = pin_model_table(
         nb_model(pos, neg, id_col, text_col, vocab_size),

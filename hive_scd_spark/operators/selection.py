@@ -139,13 +139,16 @@ def dsir_importance_weights(
     # table and derive q from it) was measured and REJECTED: the pin
     # is corpus-sized and its materialization cost t100 23.6 → 55.6 s
     # at 100× — the combiner-collapsed q shuffle it avoided was far
-    # cheaper than storing the grouped stream.  Accounting: the bench
-    # gate is builder-timed (the pin runs actions at build).
-    # r16 mechanism: driver-collect instead of lazy localCheckpoint —
-    # both tables are ≤ n_buckets rows and explicitly F.broadcast
-    # downstream (a broadcast collects to the driver anyway), and the
-    # checkpoint's fixed df→RDD build cost was the driver-measured
-    # 2.14× sf0.1 regression on select_dsir_weights (VERDICT r15).
+    # cheaper than storing the grouped stream.  The pins run actions
+    # at build.
+    # r16 mechanism: driver-collect instead of lazy localCheckpoint,
+    # but only when n_buckets ≤ MATERIALIZE_ROW_BOUND (4096: the
+    # registry gates' 512 and the scale row's 4096) — the default
+    # n_buckets=10_000 keeps the checkpoint path.  Both tables are
+    # ≤ n_buckets rows and F.broadcast downstream (a broadcast
+    # collects to the driver anyway), and the checkpoint's fixed
+    # df→RDD build cost was the driver-measured 2.14× sf0.1
+    # regression on select_dsir_weights (VERDICT r15).
     # EAGER at call time (ADVICE r15): both model fits run NOW.
     q = pin_model_table(_bucket_logprobs(feats_raw, n_buckets, "q"), n_buckets)
     p = pin_model_table(_bucket_logprobs(feats_tgt, n_buckets, "p"), n_buckets)

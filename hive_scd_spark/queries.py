@@ -1314,13 +1314,13 @@ def text_bpe_train(spark, sf_dir):
 
 
 def typo_corpus(docs, offset: int = 100_000_000):
-    """Planted-typo fixture shared by the fuzzy gate and
-    scripts/scale_10x.py: every doc contributes a 12-char md5-derived
-    string, every 7th doc also a one-character-substituted copy at
-    ``doc_id + offset``.  The offset must clear the table's id space —
-    at 10^8 it collides only beyond 100M docs per shard, and a
-    collision's failure mode (pair suppressed by the id-inequality
-    predicate) is documented here rather than discovered."""
+    """Planted-typo fixture of the fuzzy gate: every doc contributes a
+    12-char md5-derived string, every 7th doc also a one-character-
+    substituted copy at ``doc_id + offset``.  The offset must clear the
+    table's id space — at 10^8 it collides only beyond 100M docs per
+    shard, and a collision's failure mode (pair suppressed by the
+    id-inequality predicate) is documented here rather than
+    discovered."""
     strs = docs.select(
         F.col("doc_id").alias("id"),
         F.substring(F.md5(F.col("doc_id").cast("string")), 1, 12).alias("w"),
@@ -1645,8 +1645,8 @@ def decontam_bloom_screen(spark, sf_dir):
     deterministic, engine-exact false positives (the oracle replays the
     same md5 bit positions, so both engines flag identical docs).
 
-    Builder runs actions (bloom_to_hex collects <= m/4 nibble rows) —
-    bench accounting: ITERATIVE."""
+    The builder runs an action (bloom_to_hex collects <= m/4 nibble
+    rows); bench.py times builder plus action for every row."""
     from hive_scd_spark.operators.bloom import (
         bloom_build,
         bloom_probe,
@@ -2234,8 +2234,8 @@ def pipeline_scrub_classify_report(spark, sf_dir):
     # span-scrub pipeline (explode → 3 taggers → reassembly shuffle)
     # per consumer.  Measured at sf0.1: 32 Exchanges / 7.48 s before,
     # scrub subtree ×6; one scrub pass after.  eager=False keeps the
-    # materialization inside the first action; the gate is
-    # builder-timed (bench.py ITERATIVE), so accounting is unchanged.
+    # materialization inside the first action, and bench.py times
+    # builder plus action, so accounting is unchanged.
     docs2 = docs2.localCheckpoint(eager=False)
     is_pos = F.col("source").isin("src0", "src1")
     is_neg = F.col("source").isin("src2", "src3")
@@ -2429,9 +2429,9 @@ def ann_ivf_pq_incremental(spark, sf_dir):
     standing = emb.filter(F.col("vec_id") % 25 != 0)
     new = emb.filter(F.col("vec_id") % 25 == 0)
     cb = pq_codebooks(standing, dim=64, n_sub=4, n_codes=16, n_iter=2)
-    # dim=64 is the embeddings fixture's fixed width — threading it in
-    # switches the assignment dot/norm to the codegen fixed-width form
-    # (bit-identical; optimization r16, functions.dot_w)
+    # dim=64 is the embeddings fixture's fixed width; it is above
+    # functions.MAX_CODEGEN_DOT_WIDTH, so the assignment dot/norm keep
+    # the HOF fold (bit-identical either way) and dim= checks the width
     cent = ivf_centroids(standing, dim=64)
     corpus_codes = pq_encode(standing, cb, dim=64, n_sub=4)
     corpus_assign = ivf_assign(standing, centroids=cent, dim=64)
@@ -2754,10 +2754,15 @@ def multimodal_dedup_near_video(spark, sf_dir):
     differs).  The DuckDB oracle replays frame slicing, every
     per-frame envelope hash (shared CTEs), the df cap, and the pair
     counts."""
-    from hive_scd_spark.operators.multimodal import (
-        attach_binary,
-        multimodal_dedup_near_video as near_pairs,
-    )
+    from hive_scd_spark.operators.multimodal import multimodal_dedup_near_video as near_pairs
+
+    return near_pairs(_video_media(spark, sf_dir))
+
+
+def _video_media(spark, sf_dir):
+    """The planted video media table of multimodal_dedup_near_video
+    (also the input of scripts/scale.py's decode-only profile row)."""
+    from hive_scd_spark.operators.multimodal import attach_binary
 
     src = (
         t(spark, sf_dir, "documents")
@@ -2774,7 +2779,7 @@ def multimodal_dedup_near_video(spark, sf_dir):
     )
     corpus = src.unionByName(head_trim).unionByName(tail_trim)
     media = attach_binary(corpus, id_col="doc_id", payload_col="t", media_type="video")
-    return near_pairs(media.select("media_id", "payload"))
+    return media.select("media_id", "payload")
 
 
 def multimodal_dedup_near_corpus(spark, sf_dir):
@@ -4476,9 +4481,9 @@ def source_warc_scan(spark, sf_dir):
 
 def _warc_scan_over(spark, warc_dir: str, split_bytes: int = 8192):
     """The source_warc_scan plan over any _warc_fixture-layout
-    directory (shared with scripts/scale_10x.py / scale_100x.py).
+    directory (shared with scripts/scale.py).
     The 8 KiB default exercises realignment on every boundary of the
-    tiny gate fixtures; the scale scripts pass a production-like size
+    tiny gate fixtures; the scale harness passes a production-like size
     (task count still grows linearly with data, but payload — not
     per-task scheduling — is what each task spends its time on)."""
     from hive_scd_spark.sources.warc import read_warc
@@ -4667,7 +4672,7 @@ def pipeline_crawl_to_corpus(spark, sf_dir):
 
 def _crawl_to_corpus_over(spark, warc_dir: str, split_bytes: int = 8192):
     """The pipeline_crawl_to_corpus plan over any _warc_fixture-layout
-    directory (shared with scripts/scale_10x.py / scale_100x.py; see
+    directory (shared with scripts/scale.py; see
     _warc_scan_over for the split-size convention)."""
     from hive_scd_spark.sources.warc import read_warc
 
@@ -4743,7 +4748,7 @@ def pipeline_crawl_to_corpus_v2(spark, sf_dir):
 
 def _crawl_to_corpus_v2_over(spark, warc_dir: str, split_bytes: int = 8192):
     """The pipeline_crawl_to_corpus_v2 plan over any _warc_fixture-
-    layout directory (shared with scripts/scale_10x.py; see
+    layout directory (shared with scripts/scale.py; see
     _warc_scan_over for the split-size convention)."""
     from hive_scd_spark.sources.warc import read_warc
 

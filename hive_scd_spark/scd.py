@@ -247,13 +247,19 @@ def _discover_update_dirs(fs, path: str) -> list[tuple[str, str | None]]:
 
 
 def _read_base(
-    spark: SparkSession, path: str, format: str, schema=None, options=None
+    spark: SparkSession, path, format: str, schema=None, options=None, root=None
 ) -> DataFrame:
+    """Read *path* (one data dir or a list).  With the table *root* as
+    ``basePath``, Spark-native formats infer the Hive partition columns
+    (``p=0/``) of leaf dirs the same way ``spark.read`` of the root
+    does; the avro_lite fallback infers none."""
     options = dict(options or {})
     if format == "avro":
         from hive_scd_spark.sources.avro import read_avro
 
         return read_avro(spark, path, reader_schema=schema, options=options)
+    if root is not None and path != root:
+        options = {"basePath": root, **options}
     reader = spark.read.format(format).options(**options)
     if schema is not None:
         reader = reader.schema(schema)
@@ -311,7 +317,9 @@ def read_scd(
 
     parts: list[DataFrame] = []
     for script, dirs in by_script.items():
-        base = _read_base(spark, dirs[0] if len(dirs) == 1 else dirs, format, schema, options)
+        base = _read_base(
+            spark, dirs[0] if len(dirs) == 1 else dirs, format, schema, options, root=path
+        )
         if script is not None:
             base = apply_statements(base, script, as_of=as_of, compat=compat)
         parts.append(base)

@@ -48,7 +48,7 @@ def get_spark(
 
 def gc_isolate(spark, settle_s: float = 0.5) -> None:
     """Free pinned JVM state between measured runs — the shared
-    implementation behind bench.py and the scale scripts.
+    implementation behind bench.py and scripts/scale.py.
 
     Two mechanisms, one routine: (1) ContextCleaner block removal is
     ASYNCHRONOUS after a GC discovers dead RDDs, so without the settle
@@ -57,8 +57,8 @@ def gc_isolate(spark, settle_s: float = 0.5) -> None:
     (2) lazy localCheckpoint blocks are lineage-truncating and hence
     PINNED — not evictable — until their Python refs are collected,
     so a sequence of heavy runs without this call exhausts the unified
-    pool outright (scale_100x r7: UNABLE_TO_ACQUIRE_MEMORY after ~10
-    experiments).  gc.collect() drops the py4j refs, the JVM GC frees
+    pool outright (the 100x scale run, r7: UNABLE_TO_ACQUIRE_MEMORY
+    after ~10 experiments).  gc.collect() drops the py4j refs, the JVM GC frees
     the RDDs, the sleep lets ContextCleaner drain."""
     import gc
     import time
@@ -66,3 +66,18 @@ def gc_isolate(spark, settle_s: float = 0.5) -> None:
     gc.collect()
     spark.sparkContext._jvm.System.gc()
     time.sleep(settle_s)
+
+
+def time_noop(build) -> float:
+    """Seconds from calling *build* (no arguments, returns a DataFrame)
+    to the end of its action into the ``noop`` sink — the one timing
+    rule of bench.py and scripts/scale.py.  Build-time work (schema
+    inference, Catalyst analysis, pins, checkpoints, seed collects) is
+    inside the window because a user pays for it too; the noop sink
+    runs the full plan without collecting its rows (``count()`` would
+    let Catalyst prune the projections being timed)."""
+    import time
+
+    t0 = time.perf_counter()
+    build().write.format("noop").mode("overwrite").save()
+    return time.perf_counter() - t0

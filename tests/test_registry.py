@@ -4,6 +4,8 @@ inline script; this pins them in the suite)."""
 
 from __future__ import annotations
 
+import os
+
 import __spark_entry__ as entry
 from hive_scd_spark.queries import ORACLES, QUERIES
 
@@ -47,13 +49,41 @@ def test_oracle_sql_is_nonempty_text():
         assert isinstance(sql, str) and sql.strip(), name
 
 
-def test_bench_headline_is_registered_and_iterative_subset():
+def test_bench_headline_is_registered():
     import bench
 
     unknown = [n for n in bench.HEADLINE if n not in QUERIES]
     assert unknown == [], f"bench names not in the registry: {unknown}"
-    stray = [n for n in bench.ITERATIVE if n not in bench.HEADLINE]
-    assert stray == [], f"ITERATIVE entries outside HEADLINE: {stray}"
+
+
+def test_bench_extra_reps_rule_reproduces_committed_set():
+    """The 4-rep rule computed from BENCH_r15/PERF_r15 (noise bound
+    1.323) is exactly the set the r16 bench ran by hand; the current
+    set and the rep-count delta come from the same rule."""
+    import bench
+
+    assert bench.extra_reps(15) == {
+        "ann_ivf_pq_incremental", "ann_ivf_pq_topk", "ann_pq_incremental",
+        "ann_pq_adc_topk", "pipeline_semantic_dedup",
+        "pipeline_crawl_to_corpus_v2", "select_dsir_weights",
+        "text_kn_trigram_logprob", "pipeline_scrub_classify_report",
+        "dedup_minhash_lsh", "text_bigram_logprob", "text_unigram_logprob",
+        "scd2_chain_outoforder", "report_source_divergence",
+        "report_source_overlap", "multimodal_dedup_near",
+        "multimodal_dedup_near_audio", "pipeline_mix_shuffle_pack",
+        "text_remove_boilerplate", "text_span_scrub",
+    }
+    assert bench.extra_reps(14) is None  # PERF_r14.json was never written
+    plan = bench.rep_plan()
+    assert plan["timing"] == "builder+action"
+    latest = max(
+        int(f[7:-5]) for f in os.listdir(bench.ROOT)
+        if f.startswith("BENCH_r") and f[7:-5].isdigit() and f.endswith(".json")
+    )
+    now, prev = bench.extra_reps(latest), bench.extra_reps(latest - 1)
+    assert plan["reps_extra"]["queries"] == sorted(now)
+    assert plan["reps_changed_vs_prev"] == sorted(now ^ prev)
+    assert now <= set(bench.HEADLINE)
 
 
 def test_bench_stdout_line_fits_tail_capture():
@@ -65,9 +95,7 @@ def test_bench_stdout_line_fits_tail_capture():
     only ever eat query rows."""
     import json
 
-    from bench import EXTRA_REPS, HEADLINE
-
-    from bench import tail_safe_line
+    from bench import HEADLINE, tail_safe_line
 
     out = {
         "queries": {name: 999.99 - i for i, name in enumerate(HEADLINE)},
@@ -91,4 +119,3 @@ def test_bench_stdout_line_fits_tail_capture():
     # a line that already fits passes through whole
     small = dict(out, queries={"q1": 1.0})
     assert json.loads(tail_safe_line(small))["queries"] == {"q1": 1.0}
-    assert EXTRA_REPS <= set(HEADLINE)
