@@ -210,3 +210,25 @@ def fs_for(spark: SparkSession, path: str) -> LocalFS | HadoopFS:
             )
         return HadoopFS(spark, path)
     return LocalFS()
+
+
+_SIZE_SUFFIX = {"": 0, "k": 10, "m": 20, "g": 30, "t": 40, "p": 50}
+
+
+def byte_string_as_bytes(raw: str) -> int:
+    """Parse a Spark size conf value — plain bytes (``134217728``) or
+    JVM byte-string (``128m``, ``1g``, ``64kb``, ``1t``; case-insensitive,
+    optional trailing ``b``) — the same grammar as the JVM's
+    ``JavaUtils.byteStringAsBytes``.  Naive digit extraction would read
+    ``'128m'`` as 128 BYTES and plan millions of splits."""
+    m = re.fullmatch(r"\s*(\d+)\s*([kmgtp]?)b?\s*", raw.lower())
+    if not m:
+        raise ValueError(f"cannot parse byte-size conf value {raw!r}")
+    return int(m.group(1)) << _SIZE_SUFFIX[m.group(2)]
+
+
+def max_partition_bytes(spark: SparkSession) -> int:
+    """``spark.sql.files.maxPartitionBytes`` in bytes: the default split
+    size of the Avro and WARC readers."""
+    raw = spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728")
+    return byte_string_as_bytes(raw)

@@ -971,12 +971,19 @@ _SQL_SURFACE_ORACLES = {
 # ---------------------------------------------------------------------------
 
 
+# _dup_corpus re-keys its copies as doc_id + DUP_ID_OFFSET: above every
+# id a documents table holds, replicas from scripts/scale.py (n <= 130)
+# included, and a multiple of 100000 so each copy keeps its original's
+# residue mod any divisor of 100000 (the every-5th planting among them)
+DUP_ID_OFFSET = 10_000_000
+
+
 def _dup_corpus(spark, sf_dir):
     """documents ∪ re-keyed copies of every 5th doc — a corpus with
     known exact duplicates (the raw table is dup-free)."""
     docs = t(spark, sf_dir, "documents").select("doc_id", "text")
     copies = docs.filter(F.col("doc_id") % 5 == 0).select(
-        (F.col("doc_id") + 100000).alias("doc_id"), "text"
+        (F.col("doc_id") + DUP_ID_OFFSET).alias("doc_id"), "text"
     )
     return docs.unionByName(copies)
 
@@ -2495,7 +2502,7 @@ def pipeline_corpus_to_sequences(spark, sf_dir):
     is_eval = (F.col("doc_id") % 97 == 0) & (F.col("doc_id") < 97 * 200)
     eval_df = t(spark, sf_dir, "documents").select("doc_id", "text").filter(is_eval)
     # benchmark members leave by id (canonical ids are always ORIGINAL
-    # ids — copies get +100000, min wins — so the id test is exact);
+    # ids — copies get +DUP_ID_OFFSET, min wins — so the id test is exact);
     # contaminated near-copies leave by the 13-gram screen.  The token
     # filter runs BEFORE the screen: the two are independent row
     # filters on the same rows (they commute — the surviving set and
@@ -5020,11 +5027,11 @@ buckets AS (SELECT vec_id, p // (SELECT np FROM params) AS band,
 """
 
 EXT_ORACLES: dict[str, str] = {
-    "dedup_exact": """
+    "dedup_exact": f"""
         WITH corpus AS (
           SELECT doc_id, text FROM documents
           UNION ALL
-          SELECT doc_id + 100000, text FROM documents WHERE doc_id % 5 = 0)
+          SELECT doc_id + {DUP_ID_OFFSET}, text FROM documents WHERE doc_id % 5 = 0)
         SELECT MIN(doc_id) AS doc_id FROM corpus
         GROUP BY md5(lower(trim(regexp_replace(text, '\\s+', ' ', 'g'))))
     """,
@@ -5841,7 +5848,7 @@ def dedup_winnow_corpus(spark, sf_dir):
     MinHash family ships, driven by the winnowing candidate generator
     instead.  Over the known-duplicate corpus (_dup_corpus): every
     re-keyed copy shares ≥5 fingerprints with its original (the
-    k+w-1 guarantee), so each (d, d+100000) pair collapses to the
+    k+w-1 guarantee), so each (d, d+DUP_ID_OFFSET) pair collapses to the
     min-id keeper.  The oracle replays winnow selection + recursive
     transitive closure in SQL (the dedup_corpus_canonical pattern).
 
@@ -5887,7 +5894,7 @@ def dedup_winnow_capped(spark, sf_dir):
     operators/dedup.py: winnow_pairs_from_selected), and the output
     MEASURES recall on the planted duplicates, oracle-checked in both
     engines: one row per planted original (doc_id % 5 == 0) with
-    whether its re-keyed copy (doc_id + 100000) was recovered and with
+    whether its re-keyed copy (doc_id + DUP_ID_OFFSET) was recovered and with
     how many shared surviving fingerprints.  Planted copies are
     verbatim, so their shared fingerprints are the original's whole
     selected set — rare fingerprints survive any df cap ≥ 2, which is
@@ -5910,7 +5917,7 @@ def dedup_winnow_capped(spark, sf_dir):
     planted = t(spark, sf_dir, "documents").filter(
         F.col("doc_id") % 5 == 0
     ).select("doc_id")
-    hit = pairs.filter(F.col("id_b") == F.col("id_a") + 100000).select(
+    hit = pairs.filter(F.col("id_b") == F.col("id_a") + DUP_ID_OFFSET).select(
         F.col("id_a"), F.col("n_shared").alias("__ns")
     )
     out = planted.join(hit, planted["doc_id"] == hit["id_a"], "left")
@@ -6536,11 +6543,11 @@ ORACLES["text_clean_normalize"] = """
     FROM fin
 """
 
-ORACLES["pipeline_corpus_to_sequences"] = """
+ORACLES["pipeline_corpus_to_sequences"] = f"""
     WITH corpus AS (
       SELECT doc_id, text FROM documents
       UNION ALL
-      SELECT doc_id + 100000, text FROM documents WHERE doc_id % 5 = 0
+      SELECT doc_id + {DUP_ID_OFFSET}, text FROM documents WHERE doc_id % 5 = 0
     ), canon AS (
       SELECT MIN(doc_id) AS doc_id FROM corpus
       GROUP BY md5(lower(trim(regexp_replace(text, '\\s+', ' ', 'g'))))
@@ -7173,7 +7180,7 @@ def _winnow_ctes(max_df: int) -> str:
     c AS (
       SELECT doc_id, text FROM documents
       UNION ALL
-      SELECT doc_id + 100000 AS doc_id, text FROM documents WHERE doc_id % 5 = 0
+      SELECT doc_id + {DUP_ID_OFFSET} AS doc_id, text FROM documents WHERE doc_id % 5 = 0
     ),
     g AS (SELECT doc_id, lower(trim(COALESCE(text, ''))) AS t FROM c),
     h AS (SELECT doc_id,
@@ -7217,7 +7224,7 @@ ORACLES["dedup_winnow_capped"] = f"""
            CAST(COALESCE(w.n_shared, 0) AS BIGINT) AS n_shared
     FROM (SELECT doc_id FROM documents WHERE doc_id % 5 = 0) p
     LEFT JOIN wpairs w
-      ON w.id_a = p.doc_id AND w.id_b = p.doc_id + 100000
+      ON w.id_a = p.doc_id AND w.id_b = p.doc_id + {DUP_ID_OFFSET}
 """
 
 # pairs → recursive transitive closure → min-id canonical keepers
@@ -8396,11 +8403,11 @@ ORACLES["sql_recursive_calendar"] = """
     ) o ON o.d = cal.day
 """
 
-_HASH_EMBED_CTE = """
+_HASH_EMBED_CTE = f"""
 corpus AS (
   SELECT doc_id, text FROM documents
   UNION ALL
-  SELECT doc_id + 100000, text FROM documents WHERE doc_id % 5 = 0
+  SELECT doc_id + {DUP_ID_OFFSET}, text FROM documents WHERE doc_id % 5 = 0
 ), tok AS (
   SELECT doc_id,
          unnest(list_filter(

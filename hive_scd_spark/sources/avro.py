@@ -28,7 +28,7 @@ from collections.abc import Iterator
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from hive_scd_spark.fs import fs_for
+from hive_scd_spark.fs import fs_for, max_partition_bytes
 from hive_scd_spark.sources import avro_lite
 
 _NATIVE_AVRO: dict[str, bool] = {}  # keyed per application — classpaths can differ
@@ -113,7 +113,7 @@ def _sniff_writer_schema(spark: SparkSession, paths: list[str]) -> dict:
         for cfs, cpath in candidates:
             for probe in (1 << 20, 8 << 20, None):
                 try:
-                    return avro_lite.read_header_schema(cfs.read_head(cpath, probe))
+                    return avro_lite.read_header_info(cfs.read_head(cpath, probe))[0]
                 except Exception:
                     if probe is None:
                         raise
@@ -240,20 +240,6 @@ def _plan_splits(spark: SparkSession, paths: list[str], split_bytes: int):
     return splits, split_any
 
 
-def _max_partition_bytes(spark: SparkSession) -> int:
-    raw = spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728")
-    digits = "".join(ch for ch in raw if ch.isdigit())
-    mult = 1
-    low = raw.lower()
-    if low.endswith(("k", "kb")):
-        mult = 1 << 10
-    elif low.endswith(("m", "mb")):
-        mult = 1 << 20
-    elif low.endswith(("g", "gb")):
-        mult = 1 << 30
-    return int(digits) * mult if digits else 128 << 20
-
-
 def read_avro(
     spark: SparkSession, path, reader_schema=None, options=None, split_bytes=None
 ) -> DataFrame:
@@ -294,7 +280,9 @@ def read_avro(
     out_cols = [f.name for f in struct.fields]
 
     if split_bytes is None:
-        split_bytes = _max_partition_bytes(spark)
+        split_bytes = max_partition_bytes(spark)
+    if split_bytes < 1:
+        raise ValueError(f"split_bytes must be positive, got {split_bytes}")
     splits, split_any = _plan_splits(spark, paths, split_bytes)
     if split_any:
         # block-splittable path: one task per byte range, positional
@@ -304,7 +292,13 @@ def read_avro(
             _decode_split_partition(avro_json, out_cols), schema=struct
         )
 
-    # small files: one task per container file via binaryFile
+    # small files: one task per container file via binaryFile.  Routing
+    # them through the byte-range split plan as well was measured slower
+    # (perfbench asof_read, seed 7010, local[4], 2 runs per side):
+    # read_p50_s 0.416/0.419 -> 0.508/0.509 s, setup_s 1.98/2.13 ->
+    # 2.78/2.81 s, and one run with .repartition(len(splits)) gave
+    # 0.708 s.  Building the split plan alone (a 4-row createDataFrame
+    # plus a count) cost 0.16-0.18 s warm.  So both plans stay.
     binary = spark.read.format("binaryFile").load(paths)
     return binary.select("content").mapInPandas(
         _decode_partition(avro_json, out_cols), schema=struct

@@ -157,14 +157,6 @@ def read_container(path: str) -> tuple[dict, list[dict]]:
     return read_container_bytes(data)
 
 
-def read_header_schema(data: bytes) -> dict:
-    """Parse only the container header → writer schema.  Used for
-    driver-side schema sniffing (read a few header bytes of ONE file,
-    never the data blocks)."""
-    meta, _sync = _read_header(io.BytesIO(data))
-    return json.loads(meta["avro.schema"].decode("utf-8"))
-
-
 def read_header_info(data: bytes) -> tuple[dict, str, bytes, int]:
     """Parse a container header → (writer_schema, codec, sync_marker,
     header_length).  The metadata-sized unit of per-file driver work

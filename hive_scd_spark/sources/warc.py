@@ -51,13 +51,12 @@ from __future__ import annotations
 import gzip
 import hashlib
 import io
-import re
 from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from hive_scd_spark.fs import fs_for
+from hive_scd_spark.fs import fs_for, max_partition_bytes
 
 WARC_SCHEMA = T.StructType(
     [
@@ -95,21 +94,6 @@ _CHUNK = 1 << 20
 _CHAIN_DEPTH = 3
 # gzip member header: magic + the only CM the spec defines (deflate)
 _GZ_MAGIC = b"\x1f\x8b\x08"
-
-_SIZE_SUFFIX = {"": 0, "k": 10, "m": 20, "g": 30, "t": 40, "p": 50}
-
-
-def _byte_string_as_bytes(raw: str) -> int:
-    """Parse a Spark size conf value — plain bytes (``134217728``) or
-    JVM byte-string (``128m``, ``1g``, ``64kb``; case-insensitive,
-    optional trailing ``b``) — the same grammar as the JVM's
-    ``JavaUtils.byteStringAsBytes``.  Naive digit extraction would read
-    ``'128m'`` as 128 BYTES and plan millions of splits (ADVICE r9)."""
-    m = re.fullmatch(r"\s*(\d+)\s*([kmgtp]?)b?\s*", raw.lower())
-    if not m:
-        raise ValueError(f"cannot parse byte-size conf value {raw!r}")
-    return int(m.group(1)) << _SIZE_SUFFIX[m.group(2)]
-
 
 # -- record-level parse (shared by every path) --------------------------------
 
@@ -725,8 +709,7 @@ def read_warc(spark: SparkSession, path, split_bytes: int | None = None) -> Data
     ``.warc``, gzip-member-granular for ``.warc.gz`` (whole-file-gzip
     archives degrade to one task, see the module docstring)."""
     if split_bytes is None:
-        raw = spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728")
-        split_bytes = _byte_string_as_bytes(raw)
+        split_bytes = max_partition_bytes(spark)
     if split_bytes < 1:
         raise ValueError(f"split_bytes must be positive, got {split_bytes}")
     paths = list(path) if isinstance(path, (list, tuple)) else [path]

@@ -19,9 +19,15 @@ Reference semantics (all citations into ``/root/reference``):
 
 Documented deviation (SURVEY.md §7.7): the reference's lexer strips
 ``--`` and splits on ``;`` even *inside* quoted string literals
-(``SQLUpdater.java:133-135``).  This parser tracks SQL quoting
-(``'…''…'`` literals, ``"…"`` quoted identifiers) so literals may
-contain ``--`` and ``;`` — the intended semantics, covered by tests.
+(``SQLUpdater.java:133-135``).  This parser lexes SQL quoting with one
+token grammar, ``_TOKEN``, which every step below walks: ``'…'``
+literals (``''`` escapes a quote), ``"…"`` and `` `…` `` identifiers
+(a doubled backtick escapes a backtick), an unclosed quote (to the end
+of the text), ``--`` comments (to the end of the line), words
+``[A-Za-z_][A-Za-z_0-9$]*``, line breaks (``str.splitlines``), other
+whitespace and single characters.  So literals and quoted identifiers
+may contain ``--``, ``;``, ``,``, ``=`` and ``WHERE``; a line break
+inside a statement, quoted or not, joins as one space.
 For provable behavioral parity with scripts that depend on the
 reference's raw lexing, ``parse_script(..., compat="reference")``
 reproduces ``SQLUpdater.readLines``; pass ``as_of_ms`` as well to get
@@ -159,6 +165,23 @@ def _scan_statements_reference(
     return statements
 
 
+# -- the token grammar (see the module docstring) -----------------------------
+
+_BREAKS = "\n\r\v\f\x1c\x1d\x1e\x85\u2028\u2029"  # str.splitlines() boundaries
+_BREAK = re.compile(rf"\r\n|[{_BREAKS}]")
+_TOKEN = re.compile(
+    r"(?P<str>'(?:[^']|'')*+')"
+    r'|(?P<ident>"[^"]*+"|`(?:[^`]|``)*+`)'
+    r"|(?P<open>['\"`].*)"
+    rf"|(?P<comment>--[^{_BREAKS}]*)"
+    rf"|(?P<br>{_BREAK.pattern})"
+    r"|(?P<word>[A-Za-z_][A-Za-z_0-9$]*)"
+    rf"|(?P<ws>[^\S{_BREAKS}]+)"
+    r"|(?P<ch>.)",
+    re.DOTALL,
+)
+
+
 def _scan_statements(
     text: str, compat: str = "quoted", as_of_ms: int | None = None
 ) -> list[tuple[str, int | None]]:
@@ -175,58 +198,26 @@ def _scan_statements(
         raise ValueError(f"Unknown lexer compat mode: {compat!r}")
     statements: list[tuple[str, int | None]] = []
     current_time: int | None = 0  # default effective time = epoch, SQLUpdater.java:125
-
-    def flush(stmt_text: str) -> None:
-        stmt_text = stmt_text.strip()
-        if stmt_text:
-            statements.append((stmt_text, current_time))
-
-    in_squote = in_dquote = False
-    pending = ""  # accumulated SQL across lines
-    for raw_line in text.splitlines():
-        line = raw_line
-        stripped = line.strip()
-        if not in_squote and not in_dquote and stripped.startswith("--"):
-            m = _TIME_DIRECTIVE.match(stripped)
-            if m:
-                current_time = parse_scd_time(m.group(1), None)
-            continue
-        # scan char-by-char: track quotes, strip -- comments, split on ;
-        i = 0
-        kept: list[str] = []
-        n = len(line)
-        while i < n:
-            ch = line[i]
-            if in_squote:
-                kept.append(ch)
-                if ch == "'":
-                    if i + 1 < n and line[i + 1] == "'":  # escaped ''
-                        kept.append("'")
-                        i += 1
-                    else:
-                        in_squote = False
-            elif in_dquote:
-                kept.append(ch)
-                if ch == '"':
-                    in_dquote = False
-            elif ch == "'":
-                in_squote = True
-                kept.append(ch)
-            elif ch == '"':
-                in_dquote = True
-                kept.append(ch)
-            elif ch == "-" and i + 1 < n and line[i + 1] == "-":
-                break  # rest of line is a comment
-            elif ch == ";":
-                flush(pending + "".join(kept))
-                pending = ""
-                kept = []
-            else:
-                kept.append(ch)
-            i += 1
-        pending = pending + "".join(kept)
-        if pending.strip():
-            pending += " "  # newline → space when joining lines
+    pending = ""  # the statement read so far
+    line_at, blank = 0, True  # where this line starts in pending; all blank so far
+    for m in _TOKEN.finditer(text):
+        kind, tok = m.lastgroup, m.group()
+        if kind == "br":
+            line_at, blank = len(pending), True
+            pending += " "
+        elif kind == "comment":
+            if blank:  # a comment line drops out of the SQL with its line break
+                pending = pending[:line_at]
+                directive = _TIME_DIRECTIVE.match(tok.rstrip())
+                if directive:
+                    current_time = parse_scd_time(directive.group(1), None)
+        elif tok == ";":
+            if pending.strip():
+                statements.append((pending.strip(), current_time))
+            pending, blank = "", False
+        else:
+            pending += _BREAK.sub(" ", tok) if kind in ("str", "ident", "open") else tok
+            blank = blank and kind == "ws"
     if pending.strip():
         # SQLUpdater.java:155-157
         raise ScdScriptError(
@@ -235,67 +226,36 @@ def _scan_statements(
     return statements
 
 
-# -- statement-level parsing -------------------------------------------------
+def _next_token(text: str, pos: int) -> re.Match | None:
+    """The first token of *text* at or after *pos* that is not whitespace."""
+    for m in _TOKEN.finditer(text, pos):
+        if m.lastgroup not in ("ws", "br"):
+            return m
+    return None
 
-_IDENT = r'(?:[A-Za-z_][A-Za-z_0-9$]*|"[^"]+"|`[^`]+`)'
-_UPDATE_RE = re.compile(rf"^\s*UPDATE\s+({_IDENT})\s+SET\s+(.*)$", re.IGNORECASE | re.DOTALL)
-_DELETE_RE = re.compile(rf"^\s*DELETE\s+FROM\s+({_IDENT})\s*(.*)$", re.IGNORECASE | re.DOTALL)
-_WHERE_RE = re.compile(r"^\s*WHERE\s+(.*)$", re.IGNORECASE | re.DOTALL)
 
-
-def _split_top_level(text: str, is_sep) -> list[str]:
-    """Split *text* at top-level separator positions (outside quotes and
-    parens).  ``is_sep(text, i)`` returns the separator length at i, or 0."""
-    parts: list[str] = []
-    depth = 0
-    in_squote = in_dquote = False
-    start = 0
-    i = 0
-    n = len(text)
-    while i < n:
-        ch = text[i]
-        if in_squote:
-            if ch == "'":
-                if i + 1 < n and text[i + 1] == "'":
-                    i += 1
-                else:
-                    in_squote = False
-        elif in_dquote:
-            if ch == '"':
-                in_dquote = False
-        elif ch == "'":
-            in_squote = True
-        elif ch == '"':
-            in_dquote = True
-        elif ch == "(":
+def _split(text: str, sep: str = ",") -> list[str]:
+    """Split *text* at the tokens outside parens that read *sep*, in any
+    case; a word *sep* must stand alone (``1where``, ``$where`` and
+    ``whereé`` do not split)."""
+    parts, start, depth = [], 0, 0
+    for m in _TOKEN.finditer(text):
+        tok = m.group()
+        if tok == "(":
             depth += 1
-        elif ch == ")":
+        elif tok == ")":
             depth -= 1
-        elif depth == 0:
-            sep_len = is_sep(text, i)
-            if sep_len:
-                parts.append(text[start:i])
-                i += sep_len
-                start = i
+        elif depth == 0 and tok.lower() == sep:
+            s, e = m.span()
+            if m.lastgroup == "word" and (
+                (s and (text[s - 1].isalnum() or text[s - 1] == "$"))
+                or text[e : e + 1].isalnum()
+            ):
                 continue
-        i += 1
+            parts.append(text[start:s])
+            start = e
     parts.append(text[start:])
     return parts
-
-
-def _comma_sep(text: str, i: int) -> int:
-    return 1 if text[i] == "," else 0
-
-
-_WHERE_WORD = re.compile(r"WHERE\b", re.IGNORECASE)
-
-
-def _where_sep(text: str, i: int) -> int:
-    if text[i] in "Ww" and _WHERE_WORD.match(text, i):
-        # must be a standalone word: preceded by non-identifier char
-        if i == 0 or not (text[i - 1].isalnum() or text[i - 1] in "_$"):
-            return 5
-    return 0
 
 
 def _unquote(ident: str) -> str:
@@ -303,6 +263,25 @@ def _unquote(ident: str) -> str:
     if len(ident) >= 2 and ident[0] == ident[-1] and ident[0] in ('"', "`"):
         return ident[1:-1].replace(ident[0] * 2, ident[0])  # `a``b` names a`b
     return ident
+
+
+def _head(sql: str, *shape: str | None) -> tuple[str | None, str] | None:
+    """Match the start of *sql* against *shape*: keywords, and ``None``
+    for the table name (a word or a quoted identifier), each after
+    whitespace.  Returns (table, the text after the match) or None."""
+    table, end = None, 0
+    for want in shape:
+        m = _next_token(sql, end)
+        if m is None or (end and m.start() == end):
+            return None
+        if want is None:
+            if m.lastgroup not in ("word", "ident") or m.group() in ('""', "``"):
+                return None
+            table = _unquote(m.group())
+        elif m.group().lower() != want:
+            return None
+        end = m.end()
+    return table, sql[end:]
 
 
 # -- H2 dialect compatibility (SURVEY §7.4) ----------------------------------
@@ -339,65 +318,16 @@ _H2_TIME_UNITS = frozenset(
     }
 )
 
-_WORD_RE = re.compile(r"[A-Za-z_][A-Za-z_0-9$]*")
-
-
-def _leading_unit(text: str, start: int) -> tuple[str, int] | None:
-    """If the token at *start* is an H2 datetime unit — quoted
-    (``'DAY'``) or bare (``DAY``) — return (unit_name, index_after)."""
-    n = len(text)
-    k = start
-    while k < n and text[k].isspace():
-        k += 1
-    if k < n and text[k] == "'":
-        m = re.match(r"'([A-Za-z_]+)'", text[k:])
-        if m and m.group(1).lower() in _H2_TIME_UNITS:
-            return m.group(1), k + m.end()
-        return None
-    m = _WORD_RE.match(text, k)
-    if m and m.group(0).lower() in _H2_TIME_UNITS:
-        return m.group(0), m.end()
-    return None
-
 
 def _call_args(text: str, open_idx: int) -> tuple[list[str], int]:
     """Split the argument list of the call whose ``(`` is at *open_idx*
-    into top-level-comma-separated pieces, respecting string literals,
-    quoted identifiers, and nested parens.  Returns (args, index after
+    into top-level-comma-separated pieces.  Returns (args, index after
     the closing paren)."""
-    n = len(text)
     depth = 0
-    args: list[str] = []
-    cur = open_idx + 1
-    i = open_idx
-    while i < n:
-        ch = text[i]
-        if ch == "'":
-            j = i + 1
-            while j < n:
-                if text[j] == "'":
-                    if j + 1 < n and text[j + 1] == "'":
-                        j += 2
-                        continue
-                    break
-                j += 1
-            i = j + 1
-            continue
-        if ch in ('"', "`"):
-            j = text.find(ch, i + 1)
-            i = (n if j < 0 else j) + 1
-            continue
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-            if depth == 0:
-                args.append(text[cur:i])
-                return args, i + 1
-        elif ch == "," and depth == 1:
-            args.append(text[cur:i])
-            cur = i + 1
-        i += 1
+    for m in _TOKEN.finditer(text, open_idx + 1):
+        depth += (m.group() == "(") - (m.group() == ")")
+        if depth < 0:  # the call's own closing paren
+            return _split(text[open_idx + 1 : m.start()]), m.end()
     raise ScdScriptError(f"unbalanced parentheses in fragment: {text!r}")
 
 
@@ -620,39 +550,18 @@ def translate_h2(fragment: str) -> str:
       decimals, the silent-wrongness this shim exists to prevent
     """
     out: list[str] = []
-    i, n = 0, len(fragment)
-    while i < n:
-        ch = fragment[i]
-        if ch == "'":  # string literal, '' escapes
-            j = i + 1
-            while j < n:
-                if fragment[j] == "'":
-                    if j + 1 < n and fragment[j + 1] == "'":
-                        j += 2
-                        continue
-                    break
-                j += 1
-            out.append(fragment[i : j + 1])
-            i = j + 1
+    i = 0
+    while i < len(fragment):
+        m = _TOKEN.match(fragment, i)
+        word, j = m.group(), m.end()
+        if m.lastgroup != "word":  # every other token passes verbatim
+            out.append(word)
+            i = j
             continue
-        if ch in ('"', "`"):  # quoted identifier
-            j = fragment.find(ch, i + 1)
-            j = n - 1 if j < 0 else j
-            out.append(fragment[i : j + 1])
-            i = j + 1
-            continue
-        m = _WORD_RE.match(fragment, i)
-        if not m:
-            out.append(ch)
-            i += 1
-            continue
-        word = m.group(0)
         lw = word.lower()
-        j = m.end()
-        k = j
-        while k < n and fragment[k].isspace():
-            k += 1
-        is_call = k < n and fragment[k] == "("
+        nxt = _next_token(fragment, j)
+        is_call = nxt is not None and nxt.group() == "("
+        k = nxt.start() if is_call else j
         if lw == "casewhen" and is_call:
             out.append("if")
             i = j
@@ -822,14 +731,13 @@ def translate_h2(fragment: str) -> str:
             i = after
             continue
         if lw in ("dateadd", "datediff") and is_call:
-            unit = _leading_unit(fragment, k + 1)
-            if unit is not None:
-                unit_name, after = unit
+            unit = _next_token(fragment, k + 1)  # 'DAY' or DAY
+            name = unit.group().strip("'") if unit else ""
+            if name.lower() in _H2_TIME_UNITS and unit.lastgroup in ("str", "word"):
                 out.append(
-                    ("timestampadd(" if lw == "dateadd" else "timestampdiff(")
-                    + unit_name
+                    ("timestampadd(" if lw == "dateadd" else "timestampdiff(") + name
                 )
-                i = after
+                i = unit.end()
                 continue
         if lw == "concat" and is_call:
             args, after = _call_args(fragment, k)
@@ -916,20 +824,19 @@ def translate_h2(fragment: str) -> str:
 
 
 def _parse_statement(sql: str, effective_ms: int | None) -> Stmt:
-    m = _UPDATE_RE.match(sql)
-    if m:
-        table = _unquote(m.group(1))
-        rest = m.group(2)
-        body, *where_parts = _split_top_level(rest, _where_sep)
+    head = _head(sql, "update", None, "set")
+    if head and head[1][:1].isspace():
+        table, rest = head
+        body, *where_parts = _split(rest.lstrip(), "where")
         if len(where_parts) > 1:
             raise ScdScriptError(f"Multiple WHERE clauses in statement: {sql!r}")
         where = where_parts[0].strip() if where_parts else None
         sets: list[tuple[str, str]] = []
-        for assign in _split_top_level(body, _comma_sep):
-            if "=" not in assign:
+        for assign in _split(body):
+            eq = next((m for m in _TOKEN.finditer(assign) if m.group() == "="), None)
+            if eq is None:
                 raise ScdScriptError(f"Malformed SET clause {assign!r} in: {sql!r}")
-            col, _, expr = assign.partition("=")
-            col, expr = _unquote(col), expr.strip()
+            col, expr = _unquote(assign[: eq.start()]), assign[eq.end() :].strip()
             if not col or not expr:
                 raise ScdScriptError(f"Malformed SET clause {assign!r} in: {sql!r}")
             sets.append((col, translate_h2(expr)))
@@ -937,16 +844,15 @@ def _parse_statement(sql: str, effective_ms: int | None) -> Stmt:
             raise ScdScriptError(f"UPDATE with no SET clauses: {sql!r}")
         where = translate_h2(where) if where else None
         return Stmt("update", table, tuple(sets), where or None, effective_ms, sql)
-    m = _DELETE_RE.match(sql)
-    if m:
-        table = _unquote(m.group(1))
-        rest = m.group(2).strip()
+    head = _head(sql, "delete", "from", None)
+    if head:
+        table, rest = head[0], head[1].strip()
         where = None
         if rest:
-            wm = _WHERE_RE.match(rest)
-            if not wm:
+            kw = _head(rest, "where")
+            if not kw or not kw[1][:1].isspace():
                 raise ScdScriptError(f"Malformed DELETE statement: {sql!r}")
-            where = translate_h2(wm.group(1).strip())
+            where = translate_h2(kw[1].strip())
         return Stmt("delete", table, (), where, effective_ms, sql)
     # SQLUpdater.java:62-63 — anything else, incl. INSERT, is rejected
     raise ScdScriptError(f"Unsupported DML statement: {sql!r}")

@@ -10,6 +10,7 @@ import os
 
 import pytest
 
+from hive_scd_spark.fs import byte_string_as_bytes, max_partition_bytes
 from hive_scd_spark.sources import avro_lite
 from hive_scd_spark.sources.avro import read_avro
 
@@ -149,3 +150,29 @@ def test_scd_over_split_avro(spark, tmp_path):
     assert len(rows) == 100  # odd ids deleted
     assert rows[0].startswith("NAME-0000")
     assert rows[100].startswith("name-")
+
+
+def test_split_size_conf_reads_jvm_byte_strings(spark, tmp_path):
+    """The default split size follows the JVM byte-string grammar: a
+    maxPartitionBytes of '1t' is a terabyte (one task for a small file),
+    not one byte per split; an unknown suffix is an error."""
+    p = str(tmp_path / "d.avro")
+    avro_lite.write_container(p, SCHEMA, _rows(50), codec="null", rows_per_block=7)
+    old = spark.conf.get("spark.sql.files.maxPartitionBytes")
+    try:
+        spark.conf.set("spark.sql.files.maxPartitionBytes", "1t")
+        assert max_partition_bytes(spark) == 1 << 40
+        df = read_avro(spark, p)
+        assert df.rdd.getNumPartitions() == 1
+        assert df.count() == 50
+    finally:
+        spark.conf.set("spark.sql.files.maxPartitionBytes", old)
+    with pytest.raises(ValueError, match="byte-size"):
+        byte_string_as_bytes("12x")
+
+
+def test_read_avro_rejects_nonpositive_split_bytes(spark, tmp_path):
+    p = str(tmp_path / "d.avro")
+    avro_lite.write_container(p, SCHEMA, _rows(5), codec="null")
+    with pytest.raises(ValueError, match="split_bytes must be positive"):
+        read_avro(spark, p, split_bytes=0)

@@ -224,12 +224,16 @@ def test_braces_in_set_literal_stay_literal(spark):
 
 
 def test_column_names_with_space_and_backtick(spark):
-    df = df_of(spark, [(1, 10, 20, (0,))], "k int, `my col` int, `a``b` int, s struct<`x y`: int>")
+    df = df_of(
+        spark,
+        [(1, 10, 20, (0,), 3)],
+        "k int, `my col` int, `a``b` int, s struct<`x y`: int>, `a,b` int",
+    )
     out = apply_statements(
         df,
-        "UPDATE t SET `my col` = `my col` + 1, `a``b` = k, s = named_struct('x y', 5)"
-        " WHERE `a``b` = 20;",
+        "UPDATE t SET `my col` = `my col` + 1, `a``b` = k, s = named_struct('x y', 5),"
+        " `a,b` = `a,b` * 2 WHERE `a``b` = 20;",
     )
     row = out.collect()[0]
-    assert (row["my col"], row["a`b"], row["s"]["x y"]) == (11, 1, 5)
-    assert out.columns == ["k", "my col", "a`b", "s"]
+    assert (row["my col"], row["a`b"], row["s"]["x y"], row["a,b"]) == (11, 1, 5, 6)
+    assert out.columns == ["k", "my col", "a`b", "s", "a,b"]

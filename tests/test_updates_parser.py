@@ -130,6 +130,24 @@ def test_where_keyword_inside_string_not_split():
     assert stmt.where == "b = 1"
 
 
+@pytest.mark.parametrize(
+    "script, table, sets, where",
+    [
+        ("UPDATE t SET `a,b` = 1 WHERE id = 1;", "t", (("a,b", "1"),), "id = 1"),
+        ("UPDATE t SET `a;b` = 1 WHERE id = 1;", "t", (("a;b", "1"),), "id = 1"),
+        ("UPDATE t SET `a--b` = 1 WHERE id = 1;", "t", (("a--b", "1"),), "id = 1"),
+        ("UPDATE t SET x = `y where` WHERE id = 1;", "t", (("x", "`y where`"),), "id = 1"),
+        ("UPDATE `a``b` SET x = 1;", "a`b", (("x", "1"),), None),
+        ('UPDATE t SET "a=b" = 1;', "t", (("a=b", "1"),), None),
+    ],
+)
+def test_quoted_identifiers_lex_like_literals(script, table, sets, where):
+    """Backtick and double-quoted identifiers hide `,` `;` `--` `=` and
+    WHERE from the statement and SET/WHERE splits, as literals do."""
+    (stmt,) = parse_script(script)
+    assert (stmt.table, stmt.sets, stmt.where) == (table, sets, where)
+
+
 def test_multiple_statements_on_one_line():
     stmts = parse_script("UPDATE t SET a=1 WHERE b=1; DELETE FROM t WHERE a=1;")
     assert [s.kind for s in stmts] == ["update", "delete"]

@@ -7,8 +7,8 @@ import os
 
 import pytest
 
+from hive_scd_spark.fs import byte_string_as_bytes
 from hive_scd_spark.sources.warc import (
-    _byte_string_as_bytes,
     parse_warc_bytes,
     read_warc,
     write_warc_records,
@@ -41,18 +41,18 @@ def _write(tmpdir, name, data):
 
 
 def test_byte_string_as_bytes_grammar():
-    assert _byte_string_as_bytes("134217728") == 128 << 20
-    assert _byte_string_as_bytes("128m") == 128 << 20
-    assert _byte_string_as_bytes("128M") == 128 << 20
-    assert _byte_string_as_bytes("128mb") == 128 << 20
-    assert _byte_string_as_bytes("1g") == 1 << 30
-    assert _byte_string_as_bytes("64kb") == 64 << 10
-    assert _byte_string_as_bytes(" 16K ") == 16 << 10
-    assert _byte_string_as_bytes("2t") == 2 << 40
-    assert _byte_string_as_bytes("7b") == 7
+    assert byte_string_as_bytes("134217728") == 128 << 20
+    assert byte_string_as_bytes("128m") == 128 << 20
+    assert byte_string_as_bytes("128M") == 128 << 20
+    assert byte_string_as_bytes("128mb") == 128 << 20
+    assert byte_string_as_bytes("1g") == 1 << 30
+    assert byte_string_as_bytes("64kb") == 64 << 10
+    assert byte_string_as_bytes(" 16K ") == 16 << 10
+    assert byte_string_as_bytes("2t") == 2 << 40
+    assert byte_string_as_bytes("7b") == 7
     for bad in ("", "m", "12.5m", "-1g", "1q", "0x10"):
         with pytest.raises(ValueError, match="byte-size"):
-            _byte_string_as_bytes(bad)
+            byte_string_as_bytes(bad)
 
 
 def test_read_warc_honors_suffixed_conf(spark, tmp_path):

@@ -15,7 +15,7 @@ import pytest
 
 from hive_scd_spark.operators.cluster import dedup_corpus
 from hive_scd_spark.operators.dedup import winnow_pairs_from_selected
-from hive_scd_spark.queries import _dup_corpus, shared_winnow_selected
+from hive_scd_spark.queries import DUP_ID_OFFSET, _dup_corpus, shared_winnow_selected
 
 SF = "/root/testdata/sf0.001"
 
@@ -29,7 +29,7 @@ def _planted_hits(sel, cap):
     pairs = winnow_pairs_from_selected(sel, "doc_id", max_df=cap, min_shared=5)
     return {
         r["id_a"]
-        for r in pairs.filter("id_b = id_a + 100000").select("id_a").collect()
+        for r in pairs.filter(f"id_b = id_a + {DUP_ID_OFFSET}").select("id_a").collect()
     }
 
 
@@ -37,6 +37,17 @@ def _keepers(spark, sel, cap):
     pairs = winnow_pairs_from_selected(sel, "doc_id", max_df=cap, min_shared=5)
     keep = dedup_corpus(_dup_corpus(spark, SF), pairs, "doc_id")
     return {r["doc_id"] for r in keep.select("doc_id").collect()}
+
+
+def test_dup_corpus_ids_distinct_past_100000(spark, tmp_path):
+    """A replicated documents table holds ids of 100,000 and more; no
+    planted copy may take the id of a real document."""
+    ids = [0, 5, 7, 100000, 100005, 499995]
+    spark.createDataFrame(
+        [(i, f"text {i}") for i in ids], "doc_id long, text string"
+    ).write.parquet(str(tmp_path / "documents.parquet"))
+    got = [r.doc_id for r in _dup_corpus(spark, str(tmp_path)).collect()]
+    assert len(got) == len(set(got)) == len(ids) + 5  # five ids are % 5 == 0
 
 
 def test_planted_recall_cap_invariant(spark, sel):
@@ -53,12 +64,12 @@ def test_keeper_diff_is_incidental_only(spark, sel):
     k50 = _keepers(spark, sel, 50)
     # every planted copy is removed by BOTH keeper sets (the dedup
     # decision the gate exists for is cap-invariant)
-    assert not any(d >= 100000 for d in k32)
-    assert not any(d >= 100000 for d in k50)
+    assert not any(d >= DUP_ID_OFFSET for d in k32)
+    assert not any(d >= DUP_ID_OFFSET for d in k50)
     # whatever churn the cap causes is confined to incidental merges
     # among ORIGINAL documents (boilerplate-band false merges at 50)
     diff = k32 ^ k50
-    assert all(d < 100000 for d in diff)
+    assert all(d < DUP_ID_OFFSET for d in diff)
     # tightening the cap can only DROP pairs, so clusters shrink and
     # the keeper set can only grow
     assert k32 >= k50
