@@ -307,9 +307,10 @@ def scd_avro_e2e(spark, sf_dir):
     """A1 end-to-end over the reference's CORE format
     (``AvroSCDInputFormat.java:51-59``): the customer dimension
     serialized as deflate Avro containers (avro_lite writer), a
-    ``.updates`` script beside them, read through read_scd's
-    DISTRIBUTED Avro path (binaryFile scan + mapInPandas decode,
-    ``sources/avro.py``) with the full compiled statement chain.
+    ``.updates`` script beside them, read through read_scd's Avro
+    source (``sources/avro.py``: the Hive AvroSerDe's JVM scan on a
+    Hive-enabled session, else the binaryFile + mapInPandas avro_lite
+    decode) with the full compiled statement chain.
     Oracle: the same CASE chain over the parquet table — proving the
     Avro and parquet SCD reads agree value-for-value.
 

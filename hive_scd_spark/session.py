@@ -4,6 +4,11 @@ Local runs use ``local[$SPARK_GRAFT_CPUS]``; on a real cluster the same
 settings apply unchanged except master/memory.  AQE is on so runtime
 statistics re-plan shuffles (partition coalescing, skew-join splitting,
 broadcast demotion) — the knob that makes one config survive 100 TB.
+
+The session is Hive-enabled over an in-memory Derby metastore, so Avro
+reads can go through the bundled Hive ``AvroSerDe``
+(``sources/avro.py``); the metastore lives and dies with the JVM and
+writes nothing to the working directory.
 """
 
 from __future__ import annotations
@@ -40,9 +45,36 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.sql.warehouse.dir", warehouse_dir)
         .config("spark.ui.enabled", "false")
+        .enableHiveSupport()
+        .config(
+            "spark.hadoop.javax.jdo.option.ConnectionURL",
+            "jdbc:derby:memory:hive_scd_spark_metastore;create=true",
+        )
+        .config("spark.hadoop.datanucleus.schema.autoCreateAll", "true")
+        .config("spark.hadoop.hive.metastore.schema.verification", "false")
+        # one shared (empty) directory, not one `<uuid>_resources` left
+        # in the temp directory by every session
+        .config(
+            "spark.hadoop.hive.downloaded.resources.dir",
+            "${java.io.tmpdir}/hive_scd_spark_resources",
+        )
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    jvm = spark._jvm
+    # The metastore boots on first catalog use, after this point.  Derby
+    # writes derby.log to its system home, which defaults to the working
+    # directory; keep it in the JVM's temp directory instead.
+    jvm.java.lang.System.setProperty(
+        "derby.system.home", jvm.java.lang.System.getProperty("java.io.tmpdir")
+    )
+    # Every CREATE ... STORED AS AVRO first looks for the spark-avro data
+    # source to check column names, and logs the miss at ERROR with a
+    # stack trace before it uses the Hive SerDe, which needs no such check.
+    log4j = jvm.org.apache.logging.log4j
+    log4j.core.config.Configurator.setLevel(
+        "org.apache.spark.sql.execution.command.DDLUtils", log4j.Level.OFF
+    )
     return spark
 
 

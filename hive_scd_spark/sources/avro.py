@@ -1,34 +1,52 @@
-"""Avro source with native-first, distributed-pure-Python-fallback.
+"""Avro source: three readers, tried in order.
 
-``spark.read.format("avro")`` requires the external ``spark-avro``
-package jar; when it is on the classpath we use it (full pushdown,
-block-level splits).  When absent — as in a pip-installed PySpark — we
-fall back to a DISTRIBUTED decode: ``binaryFile`` scan (one task per
-container file, dot/underscore files skipped by Spark itself, so
-``.updates`` never reaches the decoder) + Arrow-batched ``mapInPandas``
-running :mod:`hive_scd_spark.sources.avro_lite` on the executors.  The
-driver touches only the header bytes of ONE file (schema sniff); no
-row data is ever materialized driver-side, so the fallback scales with
-the cluster — parallelism unit is the file, the same granularity a
-1000-file SCD table gives the reference's per-split InputFormat
-(``AvroSCDInputFormat.java:51-59``).
+1. **spark-avro** — ``spark.read.format("avro")`` when the external
+   ``spark-avro`` jar is on the classpath (full pushdown, block-level
+   splits).
+2. **Hive AvroSerDe** — when the session's catalog is ``hive`` (as
+   :func:`hive_scd_spark.session.get_spark` makes it), one directory is
+   read by the ``AvroSerDe`` that PySpark bundles in ``hive-serde`` /
+   ``hive-exec``: a temporary ``CREATE EXTERNAL TABLE … STORED AS AVRO
+   LOCATION`` with the effective schema as ``avro.schema.literal``,
+   ``spark.table``, then ``DROP TABLE`` (the returned DataFrame keeps
+   the resolved relation).  Decode runs in the JVM scan, the reference's
+   own design: it is a Hive Avro ``InputFormat``
+   (``AvroSCDInputFormat.java:51-59``).  Hive skips dot/underscore files
+   as Spark does, so ``.updates`` never reaches the decoder.
+3. **avro_lite** — the pure-Python decoder, distributed: a
+   ``binaryFile`` scan (one task per container file) or byte-range
+   splits feed ``mapInPandas`` running
+   :mod:`hive_scd_spark.sources.avro_lite` on the executors.  It reads
+   what the SerDe cannot take as one ``LOCATION`` or cannot type the
+   same way: a single file, a list of paths, a directory with data
+   subdirectories, an explicit ``split_bytes``, a ``StructType`` reader
+   schema, or a schema whose SerDe column types differ from
+   ``avro_lite.schema_to_struct`` (logical types, for one).
 
-Reader-schema evolution (field defaults) is honored on both paths,
+The SerDe route is taken only where it returns what avro_lite would:
+the same column names (the metastore lowercases them; they are renamed
+back), the same types, the same rows.  Neither route infers Hive
+partition columns.  The driver touches only the header bytes of one
+file (schema sniff); no row data is materialized driver-side.
+
+Reader-schema evolution (field defaults) is honored on every route,
 matching ``AvroSCDInputFormat.java:141-154``.  A Spark ``StructType``
-reader schema is accepted on both paths too: on the fallback it is
-converted to an equivalent flat Avro record (nullable field → union
-with null + null default), rather than being silently dropped.
+reader schema is accepted too: spark-avro takes it as is; avro_lite
+converts it to an equivalent flat Avro record (nullable field → union
+with null + null default), rather than silently dropping it.
 """
 
 from __future__ import annotations
 
 import json
+import os
+import uuid
 from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from hive_scd_spark.fs import fs_for, max_partition_bytes
+from hive_scd_spark.fs import fs_for, has_uri_scheme, max_partition_bytes
 from hive_scd_spark.sources import avro_lite
 
 _NATIVE_AVRO: dict[str, bool] = {}  # keyed per application — classpaths can differ
@@ -240,45 +258,91 @@ def _plan_splits(spark: SparkSession, paths: list[str], split_bytes: int):
     return splits, split_any
 
 
-def read_avro(
-    spark: SparkSession, path, reader_schema=None, options=None, split_bytes=None
+def _sql_string(spark: SparkSession, text: str) -> str | None:
+    """*text* as a SQL string literal, or None when the parser cannot
+    take it (quotes or backslashes under ``escapedStringLiterals``)."""
+    if ("'" in text or "\\" in text) and spark.conf.get(
+        "spark.sql.parser.escapedStringLiterals", "false"
+    ) == "true":
+        return None
+    return "'" + text.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def _null_defaults(schema: dict) -> dict:
+    """*schema* with a null default on every nullable union field that
+    has none (``null`` moved to the front, as the spec requires), so a
+    file lacking such a field of the sniffed writer schema reads NULL
+    there, as avro_lite does; a missing non-null field fails on both
+    routes."""
+    fields = [
+        {**f, "type": ["null", *(t for t in f["type"] if t != "null")], "default": None}
+        if isinstance(f["type"], list) and "null" in f["type"] and "default" not in f
+        else f
+        for f in schema["fields"]
+    ]
+    return {**schema, "fields": fields}
+
+
+def _read_serde(
+    spark: SparkSession, paths: list[str], schema: dict, struct: T.StructType
+) -> DataFrame | None:
+    """Read one directory of container files through the Hive AvroSerDe
+    with *schema* as the reader schema, or None when this route could
+    answer differently from avro_lite (see the module docstring)."""
+    if spark.conf.get("spark.sql.catalogImplementation", "in-memory") != "hive":
+        return None
+    names = [f.name for f in struct.fields]
+    # A list of directories stays on avro_lite: one table per directory
+    # costs a CREATE and a DROP each.  Measured on local[4], 150k rows of
+    # deflate Avro split evenly over n directories, builder plus noop
+    # action, median of 5 warm runs, union of SerDe tables vs avro_lite:
+    # n=1 0.129 vs 0.206 s, n=2 0.189 vs 0.206 s, n=4 0.271 vs 0.228 s,
+    # n=8 0.446 vs 0.420 s.
+    if len(paths) != 1 or len({n.lower() for n in names}) != len(names):
+        return None
+    path = paths[0]
+    fs = fs_for(spark, path)
+    top = None if fs.is_file(path) else next(fs.walk(path), None)
+    # Hive's record reader fails on a data subdirectory; avro_lite walks it
+    if top is None or any(not d.startswith((".", "_")) for d in top[1]):
+        return None
+    location = _sql_string(spark, path if has_uri_scheme(path) else os.path.abspath(path))
+    literal = _sql_string(spark, json.dumps(schema))
+    if location is None or literal is None:
+        return None
+    table = f"spark_catalog.default.hive_scd_avro_{uuid.uuid4().hex}"
+    spark.sql(
+        f"CREATE EXTERNAL TABLE {table} STORED AS AVRO LOCATION {location} "
+        f"TBLPROPERTIES ('avro.schema.literal'={literal})"
+    )
+    try:
+        df = spark.table(table)
+    finally:
+        spark.sql(f"DROP TABLE {table}")
+    # Hive reports every column nullable; names and types must match
+    got = [(f.name, f.dataType) for f in df.schema.fields]
+    if got != [(f.name.lower(), f.dataType) for f in struct.fields]:
+        return None
+    return df.toDF(*names)
+
+
+def _read_avro_lite(
+    spark: SparkSession,
+    paths: list[str],
+    avro_json: dict | None,
+    struct: T.StructType,
+    split_bytes: int | None,
 ) -> DataFrame:
-    """Read Avro container file(s) at *path* (file, dir, or list).
+    """The distributed pure-Python decode (module docstring, reader 3).
 
-    Fallback split behavior (no spark-avro jar): files larger than
-    *split_bytes* (default ``spark.sql.files.maxPartitionBytes``) are
-    decoded as BYTE-RANGE splits — each task positional-reads only its
-    range and decodes the sync-delimited blocks starting inside it, the
-    same block-level split granularity the reference's InputFormat
-    inherits from Hadoop (``AvroSCDInputFormat.java:51-59``).  Small
-    files keep the one-task-per-file ``binaryFile`` path."""
-    options = dict(options or {})
-    if _native_avro_available(spark):
-        reader = spark.read.format("avro").options(**options)
-        if isinstance(reader_schema, T.StructType):
-            # Native path takes the StructType directly — any Spark type
-            # the avro data source supports (timestamp, decimal, arrays,
-            # ...) works; do NOT round-trip through the flat-Avro-JSON
-            # converter, which only knows the reference's six primitives.
-            reader = reader.schema(reader_schema)
-        else:
-            avro_json = _normalize_reader_schema(reader_schema)
-            if avro_json is not None:
-                reader = reader.option("avroSchema", json.dumps(avro_json))
-        return reader.load(path)
-
-    # distributed fallback: the pure-Python codec is flat-primitive-only,
-    # so StructType→Avro-JSON conversion (and its NotImplementedError
-    # for wider types) applies only here
-    avro_json = _normalize_reader_schema(reader_schema)
-    paths = list(path) if isinstance(path, (list, tuple)) else [path]
-    effective = avro_json if avro_json is not None else _sniff_writer_schema(spark, paths)
-    if isinstance(reader_schema, T.StructType):
-        struct = reader_schema  # keep the caller's exact Spark types
-    else:
-        struct = avro_lite.schema_to_struct(effective)
+    Files larger than *split_bytes* (default
+    ``spark.sql.files.maxPartitionBytes``) are decoded as BYTE-RANGE
+    splits — each task positional-reads only its range and decodes the
+    sync-delimited blocks starting inside it, the same block-level split
+    granularity the reference's InputFormat inherits from Hadoop
+    (``AvroSCDInputFormat.java:51-59``).  Small files keep the
+    one-task-per-file ``binaryFile`` path."""
     out_cols = [f.name for f in struct.fields]
-
     if split_bytes is None:
         split_bytes = max_partition_bytes(spark)
     if split_bytes < 1:
@@ -303,3 +367,46 @@ def read_avro(
     return binary.select("content").mapInPandas(
         _decode_partition(avro_json, out_cols), schema=struct
     )
+
+
+def read_avro(
+    spark: SparkSession, path, reader_schema=None, options=None, split_bytes=None
+) -> DataFrame:
+    """Read Avro container file(s) at *path* (file, dir, or list) with
+    the first reader of the module docstring that can take them.
+
+    *split_bytes* is the avro_lite byte-range split size (default
+    ``spark.sql.files.maxPartitionBytes``); giving it selects avro_lite.
+    *options* reach spark-avro only."""
+    options = dict(options or {})
+    if _native_avro_available(spark):
+        reader = spark.read.format("avro").options(**options)
+        if isinstance(reader_schema, T.StructType):
+            # Native path takes the StructType directly — any Spark type
+            # the avro data source supports (timestamp, decimal, arrays,
+            # ...) works; do NOT round-trip through the flat-Avro-JSON
+            # converter, which only knows the reference's six primitives.
+            reader = reader.schema(reader_schema)
+        else:
+            avro_json = _normalize_reader_schema(reader_schema)
+            if avro_json is not None:
+                reader = reader.option("avroSchema", json.dumps(avro_json))
+        return reader.load(path)
+
+    # avro_lite is flat-primitive-only, so StructType→Avro-JSON
+    # conversion (and its NotImplementedError for wider types) and
+    # schema_to_struct's type surface bound both remaining routes
+    avro_json = _normalize_reader_schema(reader_schema)
+    paths = list(path) if isinstance(path, (list, tuple)) else [path]
+    effective = avro_json if avro_json is not None else _sniff_writer_schema(spark, paths)
+    if isinstance(reader_schema, T.StructType):
+        struct = reader_schema  # keep the caller's exact Spark types
+    else:
+        struct = avro_lite.schema_to_struct(effective)
+        if split_bytes is None:
+            if avro_json is None:
+                effective = _null_defaults(effective)
+            df = _read_serde(spark, paths, effective, struct)
+            if df is not None:
+                return df
+    return _read_avro_lite(spark, paths, avro_json, struct, split_bytes)

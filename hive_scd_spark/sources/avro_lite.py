@@ -17,10 +17,15 @@ codec in :mod:`hive_scd_spark.sources.snappy_lite` (r4; the Avro
 4-byte big-endian CRC32-of-uncompressed suffix is verified on read
 either way).
 
-This is a driver-side fixture/compatibility path for small dimension
-files — large columnar data should live in Parquet/ORC (the engine's
-``read_scd`` is format-agnostic; see ``README.md:254-258`` for the
-reference's own "other formats" aspiration).
+Where it runs: :mod:`hive_scd_spark.sources.avro` calls this decoder on
+the executors (``mapInPandas``) only when neither spark-avro nor the
+Hive ``AvroSerDe`` can take the read — single files, path lists, data
+subdirectories, explicit byte-range splits, ``StructType`` reader
+schemas — so it is the fallback, not the hot path.  The driver uses it
+for header sniffing only; the writer serves tests and fixtures.  Large
+columnar data should live in Parquet/ORC (the engine's ``read_scd`` is
+format-agnostic; see ``README.md:254-258`` for the reference's own
+"other formats" aspiration).
 """
 
 from __future__ import annotations

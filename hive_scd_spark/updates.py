@@ -258,6 +258,16 @@ def _split(text: str, sep: str = ",") -> list[str]:
     return parts
 
 
+def _string_literal(arg: str) -> str | None:
+    """The value of *arg* when it is exactly one ``'…'`` token, with
+    ``''`` unescaped; None otherwise."""
+    arg = arg.strip()
+    m = _TOKEN.match(arg)
+    if m is None or m.lastgroup != "str" or m.end() != len(arg):
+        return None
+    return arg[1:-1].replace("''", "'")
+
+
 def _unquote(ident: str) -> str:
     ident = ident.strip()
     if len(ident) >= 2 and ident[0] == ident[-1] and ident[0] in ('"', "`"):
@@ -413,14 +423,14 @@ def _fold_regex_flags(flag_arg: str, func: str, fragment: str) -> str:
     """Validate a literal H2 regex-flags argument and return the Java
     embedded-flag prefix (possibly '') — shared by REGEXP_LIKE and
     REGEXP_REPLACE.  Non-literal or unknown flags raise."""
-    flag_lit = re.fullmatch(r"'([A-Za-z]*)'", flag_arg.strip())
-    if flag_lit is None:
+    flags = _string_literal(flag_arg)
+    if flags is None:
         raise ScdScriptError(
             f"H2 {func} flags must be a string literal "
             f"(got {flag_arg.strip()!r}): {fragment!r}"
         )
     emb = []
-    for c in flag_lit.group(1).lower():
+    for c in flags.lower():
         if c not in _H2_REGEX_FLAG_MAP:
             raise ScdScriptError(
                 f"unsupported H2 {func} flag {c!r} "
@@ -656,13 +666,13 @@ def translate_h2(fragment: str) -> str:
                     f"type-dependently in H2 — cast explicitly instead): "
                     f"{fragment!r}"
                 )
-            fmt_lit = re.fullmatch(r"'([^']*)'", args[1].strip())
-            if fmt_lit is None:
+            fmt = _string_literal(args[1])
+            if fmt is None:
                 raise ScdScriptError(
                     f"H2 TO_CHAR format must be a string literal "
                     f"(got {args[1].strip()!r}): {fragment!r}"
                 )
-            java_fmt = _h2_datefmt_to_java(fmt_lit.group(1), fragment)
+            java_fmt = _h2_datefmt_to_java(fmt, fragment)
             out.append(
                 f"date_format({translate_h2(args[0].strip())}, '{java_fmt}')"
             )
@@ -671,9 +681,9 @@ def translate_h2(fragment: str) -> str:
         if lw == "trunc" and is_call:
             args, after = _call_args(fragment, k)
             if len(args) == 2:
-                unit_lit = re.fullmatch(r"'([A-Za-z0-9]+)'", args[1].strip())
-                if unit_lit and unit_lit.group(1).lower() in _H2_TRUNC_UNITS:
-                    unit = _H2_TRUNC_UNITS[unit_lit.group(1).lower()]
+                unit = (_string_literal(args[1]) or "").lower()
+                if unit in _H2_TRUNC_UNITS:
+                    unit = _H2_TRUNC_UNITS[unit]
                     a = translate_h2(args[0].strip())
                     out.append(f"date_trunc('{unit}', {a})")
                     i = after
@@ -806,13 +816,13 @@ def translate_h2(fragment: str) -> str:
                     f"time-zone overloads have no Spark equivalent): "
                     f"{fragment!r}"
                 )
-            fmt_lit = re.fullmatch(r"'([^']*)'", args[1].strip())
-            if fmt_lit is None:
+            fmt = _string_literal(args[1])
+            if fmt is None:
                 raise ScdScriptError(
                     f"H2 FORMATDATETIME format must be a string literal "
                     f"(got {args[1].strip()!r}): {fragment!r}"
                 )
-            fmt = _check_formatdatetime_fmt(fmt_lit.group(1), fragment)
+            fmt = _check_formatdatetime_fmt(fmt, fragment)
             out.append(
                 f"date_format({translate_h2(args[0].strip())}, '{fmt}')"
             )

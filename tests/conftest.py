@@ -17,6 +17,14 @@ def spark():
     yield spark
 
 
+@pytest.fixture()
+def avro_lite_only(monkeypatch):
+    """Route read_avro past the Hive SerDe to the avro_lite decoder."""
+    from hive_scd_spark.sources import avro
+
+    monkeypatch.setattr(avro, "_read_serde", lambda *a: None)
+
+
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 

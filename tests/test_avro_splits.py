@@ -90,7 +90,7 @@ def test_range_decode_first_split_tiny(container):
     assert got == rows
 
 
-def test_read_avro_split_path_matches_whole_file(spark, tmp_path):
+def test_read_avro_split_path_matches_whole_file(spark, tmp_path, avro_lite_only):
     rows = _rows(600)
     for i in range(3):
         avro_lite.write_container(
@@ -128,7 +128,7 @@ def test_read_avro_split_path_reader_schema_defaults(spark, tmp_path):
     assert out.count() == 120
 
 
-def test_scd_over_split_avro(spark, tmp_path):
+def test_scd_over_split_avro(spark, tmp_path, avro_lite_only):
     """read_scd end-to-end over a multi-split Avro dimension."""
     from hive_scd_spark.scd import read_scd
 

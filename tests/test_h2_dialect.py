@@ -193,6 +193,18 @@ def test_regexp_like_bad_flags_rejected():
         translate_h2("regexp_like(s, p, 'ix')")
 
 
+def test_literal_arguments_read_as_one_token():
+    """A format, flags or unit argument is one ``'…'`` token, ``''``
+    included: its content is then checked, not reported as a
+    non-literal."""
+    with pytest.raises(ScdScriptError, match="unsupported H2 TO_CHAR format element"):
+        translate_h2("TO_CHAR(ts, 'YYYY''MM')")
+    with pytest.raises(ScdScriptError, match="unsupported H2 REGEXP_LIKE flag \"'\""):
+        translate_h2("REGEXP_LIKE(a, 'x', 'i''')")
+    with pytest.raises(ScdScriptError, match="TRUNC is supported only as datetime"):
+        translate_h2("TRUNC(d, 'MO''NTH')")
+
+
 def test_locate_ifnull_nvl_pass_through():
     for frag in (
         "LOCATE('x', s)",
